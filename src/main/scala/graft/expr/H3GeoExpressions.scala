@@ -1,253 +1,140 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /**
  * Catalyst expressions for the geometry/traversal catalog (SURVEY.md §2.1
  * S1-S3, S10-S14, S18, S20; §2.2 E3-E8; §2.3 G1-G7; §2.6 X4-X6). Same
- * codegen-through-static-bridge pattern as [[H3Expressions]]; geometry ops
- * with foldable inputs (e.g. polyfill of a literal WKT) constant-fold at
- * plan time.
+ * bridge-call bases as [[H3Expressions]], calling into [[H3GeoBridge]];
+ * geometry ops with foldable inputs (e.g. polyfill of a literal WKT)
+ * constant-fold at plan time.
  */
 
 object H3GeoTypes {
-  val latLngStruct: StructType = StructType(Seq(
-    StructField("lat", DoubleType, nullable = false),
-    StructField("lng", DoubleType, nullable = false)))
-  val bboxStruct: StructType = StructType(Seq(
-    StructField("min_lat", DoubleType, nullable = false),
-    StructField("min_lng", DoubleType, nullable = false),
-    StructField("max_lat", DoubleType, nullable = false),
-    StructField("max_lng", DoubleType, nullable = false)))
-  val cellDistStruct: StructType = StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("k", IntegerType, nullable = false)))
-  val edgeCellsStruct: StructType = StructType(Seq(
-    StructField("origin", LongType, nullable = false),
-    StructField("destination", LongType, nullable = false)))
-  val localIjStruct: StructType = StructType(Seq(
-    StructField("i", IntegerType, nullable = false),
-    StructField("j", IntegerType, nullable = false)))
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  val cellArray: ArrayType = ArrayType(LongType, containsNull = false)
+  val coordArray: ArrayType = ArrayType(DoubleType, containsNull = false)
+  val latLngStruct: StructType = struct("lat" -> DoubleType, "lng" -> DoubleType)
+  val bboxStruct: StructType = struct("min_lat" -> DoubleType, "min_lng" -> DoubleType,
+    "max_lat" -> DoubleType, "max_lng" -> DoubleType)
+  val cellDistStruct: StructType = struct("cell" -> LongType, "k" -> IntegerType)
+  val cellDistArray: ArrayType = ArrayType(cellDistStruct, containsNull = false)
+  val edgeCellsStruct: StructType = struct("origin" -> LongType, "destination" -> LongType)
+  val localIjStruct: StructType = struct("i" -> IntegerType, "j" -> IntegerType)
 }
 
-trait H3GeoBridgeCodegen { self: Expression =>
-  protected def bridgeName: String
-  protected final def geoBridgeCall: String = s"graft.expr.H3GeoBridge.$bridgeName"
-
-  protected def genNullableGeoBridge(ctx: CodegenContext, ev: ExprCode, args: String): String = {
-    val boxed = dataType match {
-      case _: StructType => "org.apache.spark.sql.catalyst.InternalRow"
-      case _: ArrayType => "org.apache.spark.sql.catalyst.util.ArrayData"
-      case other => org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.boxedType(other)
-    }
-    val tmp = ctx.freshName("h3geo")
-    s"""
-       |$boxed $tmp = ($boxed) $geoBridgeCall($args);
-       |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-     """.stripMargin
-  }
-}
-
-abstract class H3GeoUnaryExpr extends UnaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  protected def bridge(h: Long): Any
-  override def nullSafeEval(v: Any): Any = bridge(v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => genNullableGeoBridge(ctx, ev, c))
-}
-
-abstract class H3GeoBinaryLongExpr extends BinaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  protected def bridge(a: Long, b: Long): Any
-  override def nullSafeEval(l: Any, r: Any): Any = bridge(l.asInstanceOf[Long], r.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => genNullableGeoBridge(ctx, ev, s"$l, $r"))
-}
-
-abstract class H3GeoBinaryIntExpr extends BinaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  protected def bridge(h: Long, i: Int): Any
-  override def nullSafeEval(l: Any, r: Any): Any = bridge(l.asInstanceOf[Long], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => genNullableGeoBridge(ctx, ev, s"$l, $r"))
-}
+import H3GeoTypes._
 
 // ---- S1: (lat, lng, res) -> cell ------------------------------------------
 
 case class H3LatLngToCell(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_latlng_to_cell"
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "latLngToCell"
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    H3GeoBridge.latLngToCell(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => genNullableGeoBridge(ctx, ev, s"$a, $b, $c"))
+    extends H3TernaryBridge("h3_latlng_to_cell", DoubleType, DoubleType, IntegerType, LongType,
+      "H3GeoBridge.latLngToCell", H3GeoBridge.latLngToCell) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(first = a, second = b, third = c)
 }
 
 // ---- unary geometry scalars ------------------------------------------------
 
-case class H3CellToLatLng(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_cell_to_latlng"
-  override def dataType: DataType = H3GeoTypes.latLngStruct
-  override protected def bridgeName: String = "cellToLatLng"
-  override protected def bridge(h: Long): Any = H3GeoBridge.cellToLatLng(h)
+case class H3CellToLatLng(child: Expression) extends H3UnaryBridge("h3_cell_to_latlng",
+    LongType, latLngStruct, "H3GeoBridge.cellToLatLng", H3GeoBridge.cellToLatLng) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3CellToBoundaryWkt(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_cell_to_boundary_wkt"
-  override def dataType: DataType = StringType
-  override protected def bridgeName: String = "cellToBoundaryWkt"
-  override protected def bridge(h: Long): Any = H3GeoBridge.cellToBoundaryWkt(h)
+case class H3CellToBoundaryWkt(child: Expression) extends H3UnaryBridge("h3_cell_to_boundary_wkt",
+    LongType, StringType, "H3GeoBridge.cellToBoundaryWkt", H3GeoBridge.cellToBoundaryWkt) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3CellBBox(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_cell_bbox"
-  override def dataType: DataType = H3GeoTypes.bboxStruct
-  override protected def bridgeName: String = "cellBBox"
-  override protected def bridge(h: Long): Any = H3GeoBridge.cellBBox(h)
+case class H3CellBBox(child: Expression) extends H3UnaryBridge("h3_cell_bbox",
+    LongType, bboxStruct, "H3GeoBridge.cellBBox", H3GeoBridge.cellBBox) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3CellToBoundary(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_cell_to_boundary"
-  override def dataType: DataType = ArrayType(H3GeoTypes.latLngStruct, containsNull = false)
-  override protected def bridgeName: String = "cellToBoundary"
-  override protected def bridge(h: Long): Any = H3GeoBridge.cellToBoundary(h)
+case class H3CellToBoundary(child: Expression) extends H3UnaryBridge("h3_cell_to_boundary",
+    LongType, ArrayType(latLngStruct, containsNull = false),
+    "H3GeoBridge.cellToBoundary", H3GeoBridge.cellToBoundary) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3EdgeBBox(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_edge_bbox"
-  override def dataType: DataType = H3GeoTypes.bboxStruct
-  override protected def bridgeName: String = "edgeBBox"
-  override protected def bridge(h: Long): Any = H3GeoBridge.edgeBBox(h)
+case class H3EdgeBBox(child: Expression) extends H3UnaryBridge("h3_edge_bbox",
+    LongType, bboxStruct, "H3GeoBridge.edgeBBox", H3GeoBridge.edgeBBox) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3CellAreaRads2(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_cell_area_rads2"
-  override def dataType: DataType = DoubleType
-  override protected def bridgeName: String = "cellAreaRads2"
-  override protected def bridge(h: Long): Any = H3GeoBridge.cellAreaRads2(h)
+case class H3CellAreaRads2(child: Expression) extends H3UnaryBridge("h3_cell_area_rads2",
+    LongType, DoubleType, "H3GeoBridge.cellAreaRads2", H3GeoBridge.cellAreaRads2) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3CellAreaKm2(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_cell_area_km2"
-  override def dataType: DataType = DoubleType
-  override protected def bridgeName: String = "cellAreaKm2"
-  override protected def bridge(h: Long): Any = H3GeoBridge.cellAreaKm2(h)
+case class H3CellAreaKm2(child: Expression) extends H3UnaryBridge("h3_cell_area_km2",
+    LongType, DoubleType, "H3GeoBridge.cellAreaKm2", H3GeoBridge.cellAreaKm2) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3CellAreaM2(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_cell_area_m2"
-  override def dataType: DataType = DoubleType
-  override protected def bridgeName: String = "cellAreaM2"
-  override protected def bridge(h: Long): Any = H3GeoBridge.cellAreaM2(h)
+case class H3CellAreaM2(child: Expression) extends H3UnaryBridge("h3_cell_area_m2",
+    LongType, DoubleType, "H3GeoBridge.cellAreaM2", H3GeoBridge.cellAreaM2) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 // ---- edge topology ---------------------------------------------------------
 
-case class H3EdgeDestination(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_edge_destination"
-  override def dataType: DataType = LongType
-  override protected def bridgeName: String = "edgeDestination"
-  override protected def bridge(h: Long): Any = H3GeoBridge.edgeDestination(h)
+case class H3EdgeDestination(child: Expression) extends H3UnaryBridge("h3_edge_destination",
+    LongType, LongType, "H3GeoBridge.edgeDestination", H3GeoBridge.edgeDestination) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3EdgeReverse(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_edge_reverse"
-  override def dataType: DataType = LongType
-  override protected def bridgeName: String = "edgeReverse"
-  override protected def bridge(h: Long): Any = H3GeoBridge.edgeReverse(h)
+case class H3EdgeReverse(child: Expression) extends H3UnaryBridge("h3_edge_reverse",
+    LongType, LongType, "H3GeoBridge.edgeReverse", H3GeoBridge.edgeReverse) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3EdgeCells(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_edge_cells"
-  override def dataType: DataType = H3GeoTypes.edgeCellsStruct
-  override protected def bridgeName: String = "edgeCells"
-  override protected def bridge(h: Long): Any = H3GeoBridge.edgeCells(h)
+case class H3EdgeCells(child: Expression) extends H3UnaryBridge("h3_edge_cells",
+    LongType, edgeCellsStruct, "H3GeoBridge.edgeCells", H3GeoBridge.edgeCells) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3EdgeBoundaryWkt(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_edge_boundary_wkt"
-  override def dataType: DataType = StringType
-  override protected def bridgeName: String = "edgeBoundaryWkt"
-  override protected def bridge(h: Long): Any = H3GeoBridge.edgeBoundaryWkt(h)
+case class H3EdgeBoundaryWkt(child: Expression) extends H3UnaryBridge("h3_edge_boundary_wkt",
+    LongType, StringType, "H3GeoBridge.edgeBoundaryWkt", H3GeoBridge.edgeBoundaryWkt) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3EdgeLengthKm(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_edge_length_km"
-  override def dataType: DataType = DoubleType
-  override protected def bridgeName: String = "edgeLengthKm"
-  override protected def bridge(h: Long): Any = H3GeoBridge.edgeLengthKm(h)
+case class H3EdgeLengthKm(child: Expression) extends H3UnaryBridge("h3_edge_length_km",
+    LongType, DoubleType, "H3GeoBridge.edgeLengthKm", H3GeoBridge.edgeLengthKm) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3EdgeLengthM(child: Expression) extends H3GeoUnaryExpr {
-  override def prettyName: String = "h3_edge_length_m"
-  override def dataType: DataType = DoubleType
-  override protected def bridgeName: String = "edgeLengthM"
-  override protected def bridge(h: Long): Any = H3GeoBridge.edgeLengthM(h)
+case class H3EdgeLengthM(child: Expression) extends H3UnaryBridge("h3_edge_length_m",
+    LongType, DoubleType, "H3GeoBridge.edgeLengthM", H3GeoBridge.edgeLengthM) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3CellsToDirectedEdge(left: Expression, right: Expression) extends H3GeoBinaryLongExpr {
-  override def prettyName: String = "h3_cells_to_directed_edge"
-  override def dataType: DataType = LongType
-  override protected def bridgeName: String = "cellsToDirectedEdge"
-  override protected def bridge(a: Long, b: Long): Any = H3GeoBridge.cellsToDirectedEdge(a, b)
+case class H3CellsToDirectedEdge(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_cells_to_directed_edge", LongType, LongType, LongType,
+      "H3GeoBridge.cellsToDirectedEdge", H3GeoBridge.cellsToDirectedEdge) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 // ---- traversal -------------------------------------------------------------
 
-case class H3GridDisk(left: Expression, right: Expression) extends H3GeoBinaryIntExpr {
-  override def prettyName: String = "h3_grid_disk"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def bridgeName: String = "gridDisk"
-  override protected def bridge(h: Long, k: Int): Any = H3GeoBridge.gridDisk(h, k)
+case class H3GridDisk(left: Expression, right: Expression) extends H3BinaryBridge("h3_grid_disk",
+    LongType, IntegerType, cellArray, "H3GeoBridge.gridDisk", H3GeoBridge.gridDisk) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class H3GridRing(left: Expression, right: Expression) extends H3GeoBinaryIntExpr {
-  override def prettyName: String = "h3_grid_ring"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def bridgeName: String = "gridRing"
-  override protected def bridge(h: Long, k: Int): Any = H3GeoBridge.gridRing(h, k)
+case class H3GridRing(left: Expression, right: Expression) extends H3BinaryBridge("h3_grid_ring",
+    LongType, IntegerType, cellArray, "H3GeoBridge.gridRing", H3GeoBridge.gridRing) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class H3GridDiskDistances(left: Expression, right: Expression) extends H3GeoBinaryIntExpr {
-  override def prettyName: String = "h3_grid_disk_distances"
-  override def dataType: DataType = ArrayType(H3GeoTypes.cellDistStruct, containsNull = false)
-  override protected def bridgeName: String = "gridDiskDistances"
-  override protected def bridge(h: Long, k: Int): Any = H3GeoBridge.gridDiskDistances(h, k)
+case class H3GridDiskDistances(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_grid_disk_distances", LongType, IntegerType, cellDistArray,
+      "H3GeoBridge.gridDiskDistances", H3GeoBridge.gridDiskDistances) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -255,120 +142,73 @@ case class H3GridDiskDistances(left: Expression, right: Expression) extends H3Ge
 /** [[H3GridDisk]] in libh3 SPIRAL traversal order (gridDiskDistancesUnsafe;
   * h3ron/src/iter/grid_disk.rs) instead of sorted cell ids — for code
   * ported from h3/h3ron that depends on the traversal order. */
-case class H3GridDiskSpiral(left: Expression, right: Expression) extends H3GeoBinaryIntExpr {
-  override def prettyName: String = "h3_grid_disk_spiral"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def bridgeName: String = "gridDiskSpiral"
-  override protected def bridge(h: Long, k: Int): Any = H3GeoBridge.gridDiskSpiral(h, k)
+case class H3GridDiskSpiral(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_grid_disk_spiral", LongType, IntegerType, cellArray,
+      "H3GeoBridge.gridDiskSpiral", H3GeoBridge.gridDiskSpiral) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 case class H3GridDiskSpiralDistances(left: Expression, right: Expression)
-    extends H3GeoBinaryIntExpr {
-  override def prettyName: String = "h3_grid_disk_spiral_distances"
-  override def dataType: DataType = ArrayType(H3GeoTypes.cellDistStruct, containsNull = false)
-  override protected def bridgeName: String = "gridDiskSpiralDistances"
-  override protected def bridge(h: Long, k: Int): Any =
-    H3GeoBridge.gridDiskSpiralDistances(h, k)
+    extends H3BinaryBridge("h3_grid_disk_spiral_distances", LongType, IntegerType, cellDistArray,
+      "H3GeoBridge.gridDiskSpiralDistances", H3GeoBridge.gridDiskSpiralDistances) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class H3GridDistance(left: Expression, right: Expression) extends H3GeoBinaryLongExpr {
-  override def prettyName: String = "h3_grid_distance"
-  override def dataType: DataType = LongType
-  override protected def bridgeName: String = "gridDistance"
-  override protected def bridge(a: Long, b: Long): Any = H3GeoBridge.gridDistance(a, b)
+case class H3GridDistance(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_grid_distance", LongType, LongType, LongType,
+      "H3GeoBridge.gridDistance", H3GeoBridge.gridDistance) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class H3GridPath(left: Expression, right: Expression) extends H3GeoBinaryLongExpr {
-  override def prettyName: String = "h3_grid_path"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def bridgeName: String = "gridPath"
-  override protected def bridge(a: Long, b: Long): Any = H3GeoBridge.gridPath(a, b)
+case class H3GridPath(left: Expression, right: Expression) extends H3BinaryBridge("h3_grid_path",
+    LongType, LongType, cellArray, "H3GeoBridge.gridPath", H3GeoBridge.gridPath) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 case class H3AreNeighborCells(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def prettyName: String = "h3_are_neighbor_cells"
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(l: Any, r: Any): Any =
-    H3GeoBridge.areNeighborCells(l.asInstanceOf[Long], r.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) => s"graft.expr.H3GeoBridge.areNeighborCells($l, $r)")
+    extends H3BinaryBridge("h3_are_neighbor_cells", LongType, LongType, BooleanType,
+      "H3GeoBridge.areNeighborCells", H3GeoBridge.areNeighborCells, neverNull = true) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class H3CellToLocalIj(left: Expression, right: Expression) extends H3GeoBinaryLongExpr {
-  override def prettyName: String = "h3_cell_to_local_ij"
-  override def dataType: DataType = H3GeoTypes.localIjStruct
-  override protected def bridgeName: String = "cellToLocalIj"
-  override protected def bridge(a: Long, b: Long): Any = H3GeoBridge.cellToLocalIj(a, b)
+case class H3CellToLocalIj(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_cell_to_local_ij", LongType, LongType, localIjStruct,
+      "H3GeoBridge.cellToLocalIj", H3GeoBridge.cellToLocalIj) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 case class H3LocalIjToCell(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_local_ij_to_cell"
-  override def inputTypes: Seq[DataType] = Seq(LongType, IntegerType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "localIjToCell"
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    H3GeoBridge.localIjToCell(a.asInstanceOf[Long], b.asInstanceOf[Int], c.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => genNullableGeoBridge(ctx, ev, s"$a, $b, $c"))
+    extends H3TernaryBridge("h3_local_ij_to_cell", LongType, IntegerType, IntegerType, LongType,
+      "H3GeoBridge.localIjToCell", H3GeoBridge.localIjToCell) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(first = a, second = b, third = c)
 }
 
 // ---- geometry conversion (WKT) --------------------------------------------
 
-abstract class H3WktResExpr extends BinaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  protected def bridge(wkt: org.apache.spark.unsafe.types.UTF8String, res: Int): Any
-  override def nullSafeEval(l: Any, r: Any): Any =
-    bridge(l.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => genNullableGeoBridge(ctx, ev, s"$l, $r"))
-}
-
-case class H3PolygonToCells(left: Expression, right: Expression) extends H3WktResExpr {
-  override def prettyName: String = "h3_polygon_to_cells"
-  override protected def bridgeName: String = "polygonToCells"
-  override protected def bridge(w: org.apache.spark.unsafe.types.UTF8String, res: Int): Any =
-    H3GeoBridge.polygonToCells(w, res)
+case class H3PolygonToCells(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_polygon_to_cells", StringType, IntegerType, cellArray,
+      "H3GeoBridge.polygonToCells", H3GeoBridge.polygonToCells) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class H3GeometryToCells(left: Expression, right: Expression) extends H3WktResExpr {
-  override def prettyName: String = "h3_geometry_to_cells"
-  override protected def bridgeName: String = "geometryToCells"
-  override protected def bridge(w: org.apache.spark.unsafe.types.UTF8String, res: Int): Any =
-    H3GeoBridge.geometryToCells(w, res)
+case class H3GeometryToCells(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_geometry_to_cells", StringType, IntegerType, cellArray,
+      "H3GeoBridge.geometryToCells", H3GeoBridge.geometryToCells) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class H3PolygonToCellsIntersecting(left: Expression, right: Expression) extends H3WktResExpr {
-  override def prettyName: String = "h3_polygon_to_cells_intersecting"
-  override protected def bridgeName: String = "polygonToCellsIntersecting"
-  override protected def bridge(w: org.apache.spark.unsafe.types.UTF8String, res: Int): Any =
-    H3GeoBridge.polygonToCellsIntersecting(w, res)
+case class H3PolygonToCellsIntersecting(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_polygon_to_cells_intersecting", StringType, IntegerType, cellArray,
+      "H3GeoBridge.polygonToCellsIntersecting", H3GeoBridge.polygonToCellsIntersecting) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -376,30 +216,15 @@ case class H3PolygonToCellsIntersecting(left: Expression, right: Expression) ext
 /** G3 variant over parallel coordinate arrays (lons, lats, res) — the OSM
   * ingestion entry; same trace kernel as [[H3LineStringToCells]]. */
 case class H3PointsToCells(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_points_to_cells"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType, containsNull = false), ArrayType(DoubleType, containsNull = false),
-      IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "pointsToCells"
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    H3GeoBridge.pointsToCells(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], c.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => genNullableGeoBridge(ctx, ev, s"$a, $b, $c"))
+    extends H3TernaryBridge("h3_points_to_cells", coordArray, coordArray, IntegerType, cellArray,
+      "H3GeoBridge.pointsToCells", H3GeoBridge.pointsToCells) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(first = a, second = b, third = c)
 }
 
-case class H3LineStringToCells(left: Expression, right: Expression) extends H3WktResExpr {
-  override def prettyName: String = "h3_linestring_to_cells"
-  override protected def bridgeName: String = "lineStringToCells"
-  override protected def bridge(w: org.apache.spark.unsafe.types.UTF8String, res: Int): Any =
-    H3GeoBridge.lineStringToCells(w, res)
+case class H3LineStringToCells(left: Expression, right: Expression)
+    extends H3BinaryBridge("h3_linestring_to_cells", StringType, IntegerType, cellArray,
+      "H3GeoBridge.lineStringToCells", H3GeoBridge.lineStringToCells) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -407,149 +232,65 @@ case class H3LineStringToCells(left: Expression, right: Expression) extends H3Wk
 // ---- spatial predicates (exact stage) -------------------------------------
 
 case class H3CellIntersectsPolygon(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_cell_intersects_polygon"
-  override def inputTypes: Seq[DataType] = Seq(LongType, StringType)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "cellIntersectsPolygon"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    H3GeoBridge.cellIntersectsPolygon(l.asInstanceOf[Long],
-      r.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => genNullableGeoBridge(ctx, ev, s"$l, $r"))
+    extends H3BinaryBridge("h3_cell_intersects_polygon", LongType, StringType, BooleanType,
+      "H3GeoBridge.cellIntersectsPolygon", H3GeoBridge.cellIntersectsPolygon) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 case class H3CellContainsPoint(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_cell_contains_point"
-  override def inputTypes: Seq[DataType] = Seq(LongType, DoubleType, DoubleType)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "cellContainsPoint"
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    H3GeoBridge.cellContainsPoint(a.asInstanceOf[Long], b.asInstanceOf[Double], c.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => genNullableGeoBridge(ctx, ev, s"$a, $b, $c"))
+    extends H3TernaryBridge("h3_cell_contains_point", LongType, DoubleType, DoubleType, BooleanType,
+      "H3GeoBridge.cellContainsPoint", H3GeoBridge.cellContainsPoint) {
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
     copy(first = a, second = b, third = c)
 }
 
 // ---- array compact (C3 projection form) ------------------------------------
 
-case class H3CompactCellsArray(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_compact_cells"
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "compactCells"
-  override def nullSafeEval(v: Any): Any =
-    H3GeoBridge.compactCells(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => genNullableGeoBridge(ctx, ev, c))
+case class H3CompactCellsArray(child: Expression) extends H3UnaryBridge("h3_compact_cells",
+    ArrayType(LongType), cellArray, "H3GeoBridge.compactCells", H3GeoBridge.compactCells) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 // ---- dissolve (G8/G10) -----------------------------------------------------
 
 case class H3CellsToMultiPolygonWkt(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_cells_to_multipolygon_wkt"
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), BooleanType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "cellsToMultiPolygonWkt"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    H3GeoBridge.cellsToMultiPolygonWkt(
-      l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], r.asInstanceOf[Boolean])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => genNullableGeoBridge(ctx, ev, s"$l, $r"))
+    extends H3BinaryBridge("h3_cells_to_multipolygon_wkt", ArrayType(LongType), BooleanType,
+      StringType, "H3GeoBridge.cellsToMultiPolygonWkt", H3GeoBridge.cellsToMultiPolygonWkt) {
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 // ---- res-parameter constants ----------------------------------------------
 
-case class H3HexagonAreaAvgKm2(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_hexagon_area_avg_km2"
-  override def inputTypes: Seq[DataType] = Seq(IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "hexagonAreaAvgKm2"
-  override def nullSafeEval(v: Any): Any = H3GeoBridge.hexagonAreaAvgKm2(v.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => genNullableGeoBridge(ctx, ev, c))
+case class H3HexagonAreaAvgKm2(child: Expression) extends H3UnaryBridge("h3_hexagon_area_avg_km2",
+    IntegerType, DoubleType, "H3GeoBridge.hexagonAreaAvgKm2", H3GeoBridge.hexagonAreaAvgKm2) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class H3HexagonAreaAvgM2(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_hexagon_area_avg_m2"
-  override def inputTypes: Seq[DataType] = Seq(IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "hexagonAreaAvgM2"
-  override def nullSafeEval(v: Any): Any = H3GeoBridge.hexagonAreaAvgM2(v.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => genNullableGeoBridge(ctx, ev, c))
+case class H3HexagonAreaAvgM2(child: Expression) extends H3UnaryBridge("h3_hexagon_area_avg_m2",
+    IntegerType, DoubleType, "H3GeoBridge.hexagonAreaAvgM2", H3GeoBridge.hexagonAreaAvgM2) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** E7 static: average directed-edge length at a res, km
   * (directed_edge.rs:53-58). */
-case class H3EdgeLengthAvgKm(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_edge_length_avg_km"
-  override def inputTypes: Seq[DataType] = Seq(IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "edgeLengthAvgKm"
-  override def nullSafeEval(v: Any): Any = H3GeoBridge.edgeLengthAvgKm(v.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => genNullableGeoBridge(ctx, ev, c))
+case class H3EdgeLengthAvgKm(child: Expression) extends H3UnaryBridge("h3_edge_length_avg_km",
+    IntegerType, DoubleType, "H3GeoBridge.edgeLengthAvgKm", H3GeoBridge.edgeLengthAvgKm) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** E7 static: average directed-edge length at a res, m
   * (directed_edge.rs:61-68). */
-case class H3EdgeLengthAvgM(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_edge_length_avg_m"
-  override def inputTypes: Seq[DataType] = Seq(IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "edgeLengthAvgM"
-  override def nullSafeEval(v: Any): Any = H3GeoBridge.edgeLengthAvgM(v.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => genNullableGeoBridge(ctx, ev, c))
+case class H3EdgeLengthAvgM(child: Expression) extends H3UnaryBridge("h3_edge_length_avg_m",
+    IntegerType, DoubleType, "H3GeoBridge.edgeLengthAvgM", H3GeoBridge.edgeLengthAvgM) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** E7 static: approximate neighbor-centroid distance at a res, m =
   * avg edge length x sqrt(3) (directed_edge.rs:71-78,299-301). */
-case class H3CellCentroidDistanceAvgM(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes with H3GeoBridgeCodegen {
-  override def prettyName: String = "h3_cell_centroid_distance_avg_m"
-  override def inputTypes: Seq[DataType] = Seq(IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def bridgeName: String = "cellCentroidDistanceAvgM"
-  override def nullSafeEval(v: Any): Any =
-    H3GeoBridge.cellCentroidDistanceAvgM(v.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => genNullableGeoBridge(ctx, ev, c))
+case class H3CellCentroidDistanceAvgM(child: Expression)
+    extends H3UnaryBridge("h3_cell_centroid_distance_avg_m", IntegerType, DoubleType,
+      "H3GeoBridge.cellCentroidDistanceAvgM", H3GeoBridge.cellCentroidDistanceAvgM) {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

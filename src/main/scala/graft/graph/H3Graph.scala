@@ -546,11 +546,11 @@ object H3Graph {
     * hundreds of MB built). Over budget the walk falls back to
     * broadcasting the WALK side (bounded by the origins × destinations
     * pair set — always slim), one build per hop. */
-  private def predsHintOn(spark: org.apache.spark.sql.SparkSession,
+  private[graph] def predsHintOn(spark: org.apache.spark.sql.SparkSession,
       clustered: Boolean, measuredEdges: Long, nOrigins: Int): Boolean = {
     val budget = spark.conf.get("graft.sssp.frontierRowBudget", "4000000").toLong
-    !clustered &&
-      2L * measuredEdges * math.max(nOrigins, 1) <= budget &&
+    !clustered && // by division: the product could overflow to a passing negative
+      measuredEdges <= budget / (2L * math.max(nOrigins, 1)) &&
       spark.conf.get("graft.sssp.frontierHint", "true") == "true"
   }
 

@@ -13,7 +13,7 @@ import java.lang.Math._
  * face centers, face axis azimuths, base-cell home positions) plus
  * everything else *derived* at class-init from that kernel by exact integer
  * hex-grid arithmetic and spherical trig. The derived tables are
- * cross-validated by [[H3GeoSelfCheck]] invariants (roundtrips, neighbor
+ * cross-validated by the `H3GeoSpec` invariants (roundtrips, neighbor
  * reciprocity, ring sizes, 4-pi total area).
  */
 object H3Geo {

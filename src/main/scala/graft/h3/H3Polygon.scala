@@ -34,11 +34,23 @@ object H3Polygon {
   /** rings as arrays of (lng, lat) degrees; first ring is the shell. */
   final case class Polygon(rings: Array[Array[(Double, Double)]])
 
-  private def parseCoordSeq(s: String): Array[(Double, Double)] =
-    s.split(",").map { p =>
-      val xs = p.trim.split("\\s+")
-      (xs(0).toDouble, xs(1).toDouble)
-    }
+  /** `x y [...]` -> (lng, lat); None unless the first two fields are numbers. */
+  private def parsePoint(p: String): Option[(Double, Double)] = p.trim.split("\\s+") match {
+    case Array(x, y, _*) => for (a <- x.toDoubleOption; b <- y.toDoubleOption) yield (a, b)
+    case _ => None
+  }
+
+  /** `x y, x y, ...`; None when any point is malformed. */
+  private def parseCoordSeq(s: String): Option[Array[(Double, Double)]] = {
+    val pts = s.split(",").map(parsePoint)
+    if (pts.forall(_.isDefined)) Some(pts.map(_.get)) else None
+  }
+
+  /** one polygon's rings; None when a ring is malformed or under 3 points. */
+  private def parseRings(s: String): Option[Array[Array[(Double, Double)]]] = {
+    val rings = splitTopLevel(s).map(r => parseCoordSeq(stripParens(r)))
+    if (rings.exists(r => r.isEmpty || r.get.length < 3)) None else Some(rings.map(_.get).toArray)
+  }
 
   private def splitTopLevel(s: String): Seq[String] = {
     val out = mutable.ArrayBuffer.empty[String]
@@ -63,14 +75,16 @@ object H3Polygon {
     if (t.startsWith("(") && t.endsWith(")")) t.substring(1, t.length - 1) else t
   }
 
+  /** a tagged WKT's coordinates: from the first `(`, outer pair stripped; "" without one. */
+  private def wktBody(t: String): String =
+    if (t.indexOf('(') < 0) "" else stripParens(t.substring(t.indexOf('(')))
+
   /** parse POLYGON ((...),(...)) -> rings. */
   def parsePolygonWkt(wkt: String): Option[Polygon] = {
     val t = wkt.trim
     val up = t.toUpperCase
     if (!up.startsWith("POLYGON")) return None
-    val body = stripParens(t.substring(t.indexOf('(')))
-    val rings = splitTopLevel(body).map(r => parseCoordSeq(stripParens(r))).toArray
-    if (rings.isEmpty || rings.exists(_.length < 3)) None else Some(Polygon(rings))
+    parseRings(wktBody(t)).map(Polygon(_))
   }
 
   /** parse MULTIPOLYGON (((...)),((...))) -> polygons; also accepts POLYGON. */
@@ -79,21 +93,15 @@ object H3Polygon {
     val up = t.toUpperCase
     if (up.startsWith("POLYGON")) return parsePolygonWkt(t).map(Array(_))
     if (!up.startsWith("MULTIPOLYGON")) return None
-    val body = stripParens(t.substring(t.indexOf('(')))
-    val polys = splitTopLevel(body).map { p =>
-      val rings = splitTopLevel(stripParens(p)).map(r => parseCoordSeq(stripParens(r))).toArray
-      Polygon(rings)
-    }.toArray
-    if (polys.isEmpty || polys.exists(_.rings.exists(_.length < 3))) None else Some(polys)
+    val polys = splitTopLevel(wktBody(t)).map(p => parseRings(stripParens(p)))
+    if (polys.exists(_.isEmpty)) None else Some(polys.map(p => Polygon(p.get)).toArray)
   }
 
   /** parse LINESTRING (x y, x y, ...). */
   def parseLineStringWkt(wkt: String): Option[Array[(Double, Double)]] = {
     val t = wkt.trim
     if (!t.toUpperCase.startsWith("LINESTRING")) return None
-    val body = stripParens(t.substring(t.indexOf('(')))
-    val pts = parseCoordSeq(body)
-    if (pts.length < 2) None else Some(pts)
+    parseCoordSeq(wktBody(t)).filter(_.length >= 2)
   }
 
   def polygonWkt(rings: Seq[Seq[(Double, Double)]]): String =
@@ -554,24 +562,19 @@ object H3Polygon {
   def geometryToCells(wkt: String, res: Int): Array[Long] = {
     val t = wkt.trim
     val up = t.toUpperCase
-    def coordsBody: String = stripParens(t.substring(t.indexOf('(')))
+    def pointCell(p: String): Option[Long] =
+      parsePoint(p).map { case (x, y) => latLngToCell(y, x, res) }.filter(_ != H3Core.H3Null)
     val cells: Array[Long] =
       if (up.startsWith("GEOMETRYCOLLECTION")) {
-        splitTopLevel(coordsBody).toArray.flatMap(g => geometryToCells(g.trim, res))
+        splitTopLevel(wktBody(t)).toArray.flatMap(g => geometryToCells(g.trim, res))
       } else if (up.startsWith("MULTIPOINT")) {
         // both MULTIPOINT (1 2, 3 4) and MULTIPOINT ((1 2), (3 4))
-        splitTopLevel(coordsBody).toArray.flatMap { p =>
-          val xs = stripParens(p).trim.split("\\s+")
-          if (xs.length < 2) Array.emptyLongArray
-          else Array(latLngToCell(xs(1).toDouble, xs(0).toDouble, res))
-        }.filter(_ != H3Core.H3Null)
+        splitTopLevel(wktBody(t)).toArray.flatMap(p => pointCell(stripParens(p)))
       } else if (up.startsWith("POINT")) {
-        val xs = coordsBody.trim.split("\\s+")
-        if (xs.length < 2) Array.emptyLongArray
-        else Array(latLngToCell(xs(1).toDouble, xs(0).toDouble, res)).filter(_ != H3Core.H3Null)
+        pointCell(wktBody(t)).toArray
       } else if (up.startsWith("MULTILINESTRING")) {
-        splitTopLevel(coordsBody).toArray
-          .flatMap(l => lineStringToCells(parseCoordSeq(stripParens(l)), res))
+        splitTopLevel(wktBody(t)).toArray
+          .flatMap(l => parseCoordSeq(stripParens(l)).toArray.flatMap(lineStringToCells(_, res)))
       } else if (up.startsWith("LINESTRING")) {
         lineStringToCells(t, res)
       } else if (up.startsWith("POLYGON") || up.startsWith("MULTIPOLYGON")) {

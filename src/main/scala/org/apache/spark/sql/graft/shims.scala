@@ -17,6 +17,10 @@ object shims {
   def aggColumnDistinct(f: AggregateFunction): Column =
     ExpressionUtils.column(f.toAggregateExpression(isDistinct = true))
 
+  /** Spark's `WRONG_NUM_ARGS` analysis error (`QueryCompilationErrors` is private[sql]). */
+  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)
+
   /** Codegen'd bloom probe: `BloomFilterMightContain` over a pre-built
     * sketch serialized into a foldable binary literal. Replaces the Scala
     * UDF probe (`udf(h => bf.mightContainLong(h))`), whose non-codegen

@@ -351,4 +351,17 @@ class H3GraphSpec extends AnyFunSuite {
     // fewer (or equal) edges after coarsening
     assert(down.length <= g.count())
   }
+
+  test("predecessor-broadcast row budget cannot overflow") {
+    // default budget 4M rows. 2 × 2^61 × 4 = 2^65 wraps to 0 in Long
+    // arithmetic, which the product form of the gate read as in budget
+    val huge = 1L << 61
+    assert(2L * huge * 4 <= 4000000L)
+    def on(edges: Long, origins: Int) = H3Graph.predsHintOn(spark, clustered = false, edges, origins)
+    assert(!on(huge, 4) && !on(Long.MaxValue, 1))
+    // the boundary is unchanged: 2 × 500000 × 4 == budget; no origins counts as one
+    assert(on(500000L, 4) && !on(500001L, 4))
+    assert(on(2000000L, 0) && !on(2000001L, 0))
+    assert(!H3Graph.predsHintOn(spark, clustered = true, 1L, 1))
+  }
 }

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.lang.Math._
 
 /**
- * Geometry + traversal invariants (the full battery lives in
- * [[H3GeoSelfCheck]]; this spec pins the critical subset in CI).
+ * Geometry + traversal invariants, ordered from the memorized kernel to the
+ * derived tables and conversions so a failure localizes the broken table.
  */
 class H3GeoSpec extends AnyFunSuite {
   import H3Geo._
@@ -17,6 +17,38 @@ class H3GeoSpec extends AnyFunSuite {
       for (r <- 1 to res) h = H3Core.withDigit(H3Core.withRes(h, r), r, if (r % 3 == 0) 2 else 0)
       h
     }
+
+  test("face centres are unit vectors at the icosahedron's pairwise angles") {
+    val pts = faceCenterPoint
+    assert(pts.forall(p => abs(p(0) * p(0) + p(1) * p(1) + p(2) * p(2) - 1.0) < 1e-12))
+    val dots = for (a <- 0 until 20; b <- a + 1 until 20)
+      yield pts(a)(0) * pts(b)(0) + pts(a)(1) * pts(b)(1) + pts(a)(2) * pts(b)(2)
+    // the 20 face centres are a dodecahedron's vertices: 190 pairs at 5 angles
+    val want = Seq(-1.0 -> 10, -sqrt(5) / 3 -> 30, -1.0 / 3 -> 60, 1.0 / 3 -> 60, sqrt(5) / 3 -> 30)
+    for ((d, n) <- want) assert(dots.count(x => abs(x - d) < 1e-9) == n, s"pairs at dot $d")
+  }
+
+  test("face axis azimuths lie in [0, 2 pi)") {
+    assert(faceAxesAz0.length == 20 && faceAxesAz0.forall(a => a >= 0.0 && a < 2 * PI))
+  }
+
+  test("faceIjkBaseCells covers all 122 base cells; home positions have rotation 0") {
+    val seen = for (f <- 0 until 20; i <- 0 to 2; j <- 0 to 2; k <- 0 to 2)
+      yield faceIjkBaseCells(f)(i)(j)(k)(0)
+    assert(seen.toSet == (0 until 122).toSet)
+    for (bc <- 0 until 122) {
+      val d = baseCellData(bc)
+      val e = faceIjkBaseCells(d(0))(d(1))(d(2))(d(3))
+      assert(e(0) == bc && e(1) == 0, s"bc $bc home (${d.mkString(",")}) -> bc ${e(0)} rot ${e(1)}")
+    }
+  }
+
+  test("res-0 centroid roundtrip for all 122 base cells") {
+    for (c <- H3Core.res0Cells()) {
+      val g = cellToLatLng(c)
+      assert(latLngToCell(g.lat, g.lng, 0) == c, s"bc ${H3Core.getBaseCell(c)}")
+    }
+  }
 
   test("canonical goldens (public H3 docs)") {
     assert(latLngToCell(37.3615593, -122.0553238, 7) == 0x87283472bffffffL)
@@ -40,6 +72,39 @@ class H3GeoSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("deep pseudo-random roundtrip at res 1-15, four chains per base cell") {
+    val rnd = new scala.util.Random(42)
+    for (bc <- 0 until 122; rep <- 0 until 4) {
+      var h = H3Core.res0Cells()(bc)
+      for (r <- 1 to 15) {
+        var d = rnd.nextInt(7)
+        if (H3Core.isPentagon(h) && d == 1) d = 0
+        h = H3Core.withDigit(H3Core.withRes(h, r), r, d)
+        if (r <= 12 || rep == 0) {
+          val g = cellToLatLng(h)
+          assert(latLngToCell(g.lat, g.lng, r) == h, s"res $r bc $bc ${h.toHexString}")
+        }
+      }
+    }
+  }
+
+  test("boundary sanity at res 4/5: enough vertices, no vertex 3x farther than another") {
+    for (bc <- 0 until 122; res <- 4 to 5) {
+      var h = H3Core.res0Cells()(bc)
+      for (r <- 1 to res) h = H3Core.withDigit(H3Core.withRes(h, r), r, 0)
+      val c = cellToLatLngRads(h)
+      val verts = cellToBoundaryRads(h)
+      assert(verts.length >= (if (H3Core.isPentagon(h)) 5 else 6), s"bc $bc res $res")
+      val dists = verts.map(v => greatCircleDistanceRads(c, v))
+      assert(dists.max <= 3 * dists.min, s"bc $bc res $res: ratio ${dists.max / dists.min}")
+    }
+  }
+
+  test("res-1 cells tile the sphere to exactly 4 pi") {
+    val total = H3Core.res0Cells().flatMap(c => H3Core.cellToChildren(c, 1)).map(cellAreaRads2).sum
+    assert(abs(total - 4 * PI) < 1e-9)
   }
 
   test("res-0 cells tile the sphere to exactly 4 pi") {
@@ -121,6 +186,24 @@ class H3GeoSpec extends AnyFunSuite {
     val f = gridRing(c, 3).head
     val p2 = gridPathCells(c, f)
     assert(p2.length == 4 && p2.head == c && p2.last == f)
+  }
+
+  test("sampled average edge length at res 8 is near the published 0.461355 km") {
+    val cells = sampleCells(8).filterNot(H3Core.isPentagon).take(40)
+    val lens = cells.flatMap(c => H3Core.originToDirectedEdges(c).map(edgeLengthKm))
+    val avg = lens.sum / lens.length
+    assert(avg > 0.40 && avg < 0.53, s"avg $avg km")
+  }
+
+  test("malformed WKT parses to None, never an exception") {
+    for (w <- Seq("POLYGON ((1 2, 3", "POLYGON ((1 2, 3 x, 5 6, 1 2))", "POLYGON EMPTY", "POLYGON ((1 2))"))
+      assert(H3Polygon.parsePolygonWkt(w).isEmpty && H3Polygon.parseMultiPolygonWkt(w).isEmpty, w)
+    assert(H3Polygon.parseMultiPolygonWkt("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((2 y, 3 3)))").isEmpty)
+    assert(H3Polygon.parseLineStringWkt("LINESTRING (1 2, x 4)").isEmpty)
+    assert(H3Polygon.parseLineStringWkt("LINESTRING EMPTY").isEmpty)
+    assert(H3Polygon.geometryToCells("POINT (a b)", 5).isEmpty)
+    assert(H3Polygon.geometryToCells("MULTIPOINT ((1 2), (a b))", 5).length == 1)
+    assert(H3Polygon.parsePolygonWkt("POLYGON ((0 0, 1 0, 1 1, 0 0))").exists(_.rings.head.length == 4))
   }
 
   test("maxPolygonToCellsSize bounds the actual polyfill (G6)") {
