@@ -71,38 +71,6 @@ object GraphQueries {
     H3Graph.graphFromEdgeList(fwd.unionByName(bwd), "origin", "destination", "weight")
   }
 
-  /** The p116 query body with a sweepable hopsPerRound (P116Probe's
-    * residual decomposition runs {4, 8, 16}; the catalog entry pins 8 —
-    * ~12 relax + ~18 walk barriers collapse to ~4 + ~5, this query's cost
-    * was pure round-barrier scheduling floor, 18% of the whole r13 bench
-    * wall). Output and fixpoint are hop-count-invariant (spec-pinned). */
-  private[graft] def p116WithHops(s: SparkSession, dir: String,
-      hopsPerRound: Int): DataFrame = {
-    val graph = expressChainGraph(s, dir, ExpressM).localCheckpoint(false)
-    val origins = Seq(0L, 60L).map(SparkEntry.Synth.cell(_, 5))
-    val dests = Seq(25L, 40L).map(SparkEntry.Synth.cell(_, 5))
-    val paths = H3Graph.shortestPathsIterativePaths(s, graph, origins, dests,
-        hopsPerRound = hopsPerRound)
-      .localCheckpoint(false) // 4 rows; feeds the output AND the walk law
-    val hops = paths.select(col("origin"), col("destination"), posexplode(col("path")))
-      .select(col("origin"), col("destination"), col("pos"), col("col").as("cell"))
-    val pairs = hops.as("a").join(hops.as("b"),
-        expr("a.origin = b.origin AND a.destination = b.destination AND b.pos = a.pos + 1"))
-      .select(col("a.origin").as("po"), col("a.destination").as("pd"),
-        col("a.cell").as("o"), col("b.cell").as("d"))
-    val walkCost = pairs.join(graph,
-        pairs("o") === graph("origin") && pairs("d") === graph("destination"))
-      .groupBy(col("po"), col("pd")).agg(sum(col("weight")).as("walk_cost"))
-    paths.join(walkCost,
-        paths("origin") === walkCost("po") && paths("destination") === walkCost("pd"))
-      .select(paths("origin"), paths("destination"),
-        round(col("cost"), 4).as("cost"),
-        (abs(col("walk_cost") - col("cost")) < lit(1e-6) &&
-          expr("path[0]") === paths("origin") &&
-          expr("path[size(path) - 1]") === paths("destination")).as("walk_ok"))
-      .orderBy(col("origin"), col("destination"))
-  }
-
   private def oracleChain: String = oracleChainN(N)
 
   private def oracleChainN(n: Int): String =
@@ -343,7 +311,36 @@ object GraphQueries {
     // argmin tie-break is deterministic in-engine but not an oracle law);
     // instead walk_ok asserts the path CONTRACT in-plan: endpoints match
     // and the walk's edge weights sum to the reported cost.
-    "p116_sssp_paths" -> ((s, dir) => p116WithHops(s, dir, 8)),
+    // hopsPerRound=8: ~12 relax + ~18 walk barriers collapse to ~4 + ~5 —
+    // this query's cost was pure round-barrier scheduling floor (18% of
+    // the whole r13 bench wall; 8 beat 4 and 16 in the r16 hop sweep,
+    // OPTIMIZATION_r16.md). Output and fixpoint are hop-count-invariant
+    // (spec-pinned).
+    "p116_sssp_paths" -> ((s, dir) => {
+      val graph = expressChainGraph(s, dir, ExpressM).localCheckpoint(false)
+      val origins = Seq(0L, 60L).map(SparkEntry.Synth.cell(_, 5))
+      val dests = Seq(25L, 40L).map(SparkEntry.Synth.cell(_, 5))
+      val paths = H3Graph.shortestPathsIterativePaths(s, graph, origins, dests,
+          hopsPerRound = 8)
+        .localCheckpoint(false) // 4 rows; feeds the output AND the walk law
+      val hops = paths.select(col("origin"), col("destination"), posexplode(col("path")))
+        .select(col("origin"), col("destination"), col("pos"), col("col").as("cell"))
+      val pairs = hops.as("a").join(hops.as("b"),
+          expr("a.origin = b.origin AND a.destination = b.destination AND b.pos = a.pos + 1"))
+        .select(col("a.origin").as("po"), col("a.destination").as("pd"),
+          col("a.cell").as("o"), col("b.cell").as("d"))
+      val walkCost = pairs.join(graph,
+          pairs("o") === graph("origin") && pairs("d") === graph("destination"))
+        .groupBy(col("po"), col("pd")).agg(sum(col("weight")).as("walk_cost"))
+      paths.join(walkCost,
+          paths("origin") === walkCost("po") && paths("destination") === walkCost("pd"))
+        .select(paths("origin"), paths("destination"),
+          round(col("cost"), 4).as("cost"),
+          (abs(col("walk_cost") - col("cost")) < lit(1e-6) &&
+            expr("path[0]") === paths("origin") &&
+            expr("path[size(path) - 1]") === paths("destination")).as("walk_ok"))
+        .orderBy(col("origin"), col("destination"))
+    }),
 
     // P6/P14 on REAL data: the reference's own prepared Germany street
     // graph (75k nodes / 312k edges, bincode+lz4) routed through its

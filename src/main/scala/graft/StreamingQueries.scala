@@ -34,11 +34,11 @@ object StreamingQueries {
     * CheckpointLayout mechanism) whose shuffle-partition count — which for
     * a streaming query is the STATE STORE partition count, fixed at query
     * start and beyond AQE's reach — is derived from the measured input
-    * size instead of inherited from the batch session. Measured (r16
-    * StreamProbe, sf0.1): per-micro-batch state store commits dominate the
-    * gates' wall — e.g. s03's micro-batches spend 26-54 s of SUMMED
-    * commitTimeMs across 32 partitions on a 0.6 MB input, each partition
-    * paying file create + rename + fsync per batch for KBs of state. The
+    * size instead of inherited from the batch session. Measured (r16,
+    * sf0.1, `graft.stream.probe=true`): per-micro-batch state store commits
+    * dominate the gates' wall — e.g. s03's micro-batches spend 26-54 s of
+    * SUMMED commitTimeMs across 32 partitions on a 0.6 MB input, each
+    * partition paying file create + rename + fsync per batch for KBs of state. The
     * derivation (one ~64 MB-of-input state partition, floored at 1, capped
     * at 4× the cluster's cores) scales the fsync fan-out with the data: a
     * production stream sizes state partitions to per-trigger volume, never

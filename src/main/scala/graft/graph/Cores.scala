@@ -33,10 +33,10 @@ object Cores {
     * Rounds are EAGER with the superseded edge generation's blocks freed
     * as soon as its successor is materialized — the lazy chain this
     * replaced pinned every generation (`rounds` × edge-frame memory, the
-    * LayoutScaleProbe lesson) for the session. The row count rides the
-    * materializing job's accumulator for free and doubles as a FIXPOINT
-    * exit: `e` only ever shrinks under the semi-joins, so an unchanged
-    * count means an unchanged set and every remaining round is a no-op —
+    * r14 layout lesson, SURVEY §15) for the session. The row count rides
+    * the materializing job's accumulator for free and doubles as a
+    * FIXPOINT exit: `e` only ever shrinks under the semi-joins, so an
+    * unchanged count means an unchanged set and every remaining round is a no-op —
     * results are identical to running the full budget (spec-pinned).
     * `checkpointDir` gives the loop the same executor-loss durability
     * cadence as CC/LPA/PR (a reliable file checkpoint every

@@ -535,6 +535,22 @@ object H3Graph {
       spark.conf.get("graft.sssp.frontierHint", "true") != "true") identity
     else broadcast
 
+  /** The SSSP rounds' convergence test over a fold-with-`__old` row: the
+    * row improved its cell's best cost (a first reach, or a strictly
+    * lower cost). Indices resolve by name once, outside the per-row
+    * closure, so a reordered fold schema cannot test the wrong column. */
+  private[graph] def improvedRow(schema: StructType): Row => Boolean = {
+    val (cost, old) = (schema.fieldIndex("cost"), schema.fieldIndex("__old"))
+    r => r.isNullAt(old) || r.getDouble(cost) < r.getDouble(old)
+  }
+
+  /** The path walk-back's activity test: the walk has not reached its
+    * origin yet (`cur != src`), indices resolved by name like [[improvedRow]]. */
+  private[graph] def walkActiveRow(schema: StructType): Row => Boolean = {
+    val (src, cur) = (schema.fieldIndex("src"), schema.fieldIndex("cur"))
+    r => r.getLong(src) != r.getLong(cur)
+  }
+
   /** [[frontierHint]] for the walk-reconstruction join's static side (the
     * predecessor table): bounded by |nodes| × |origins| rows, and
     * |origins| is CALLER-controlled — a small-regime graph with a large
@@ -628,9 +644,9 @@ object H3Graph {
       // BOTH next-round frames — the best table and the frontier — are
       // projections of its blocks. Previously the frontier was a second
       // checkpoint fed by a per-round join against the best table.
+      val folded = fold(acc, relax(front))
       val (ff, nImproved, freeF) = graft.util.Barriers.roundBarrierCountingFreeable(
-        fold(acc, relax(front)), round, checkpointDir)(
-        r => r.isNullAt(3) || r.getDouble(2) < r.getDouble(3))
+        folded, round, checkpointDir)(improvedRow(folded.schema))
       // that action materialized ff; every generation it superseded — the
       // previous round's fold and this round's intra-round intermediates —
       // is dead and its blocks can be freed. Blocks held at any moment:
@@ -739,9 +755,9 @@ object H3Graph {
       // one barrier per round: best and frontier are projections of the
       // fold-with-__old checkpoint, the convergence count rides its
       // materializing job (see [[shortestPathsIterative]])
+      val folded = fold(acc, relax(front))
       val (ff, nImproved, freeF) = graft.util.Barriers.roundBarrierCountingFreeable(
-        fold(acc, relax(front)), round, checkpointDir)(
-        r => r.isNullAt(4) || r.getDouble(2) < r.getDouble(4))
+        folded, round, checkpointDir)(improvedRow(folded.schema))
       freeIntermediates.foreach(_())
       freeBest()
       freeBest = freeF
@@ -795,7 +811,7 @@ object H3Graph {
       // rounds (and their driver-side barrier latency) halve at equal work
       val stepped = (1 to hopsPerRound).foldLeft(walk)((w, _) => step(w))
       val (nw, nActive, freeNw) = graft.util.Barriers.roundBarrierCountingFreeable(
-        stepped, wround, checkpointDir)(r => r.getLong(0) != r.getLong(3))
+        stepped, wround, checkpointDir)(walkActiveRow(stepped.schema))
       freeWalk()
       freeWalk = freeNw
       walk = nw

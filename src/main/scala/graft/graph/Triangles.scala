@@ -112,19 +112,18 @@ object Triangles {
    * user-multiplied probe graph OOMs a 128 GB JVM on the ~900×
    * wedge inflation; capped, the wedge frame grows with NODES).
    *
-   * CAVEAT on the default: the bounded-buffer guarantee below (a
+   * `maxDegree` has no default: the bounded-buffer guarantee below (a
    * middle's aggregation buffer holds at most maxDegree+1 ids, never
-   * its true neighbor set) is conditional on a CALLER-SUPPLIED finite
-   * cap. With the default `maxDegree = Long.MaxValue`, capK saturates
-   * at Int.MaxValue and a celebrity middle's full distinct neighbor
-   * set materializes in one boxed TreeSet buffer — a per-task OOM
-   * cliff the old self-join shape did not have (it blew up in wedge
-   * COUNT, not in a single group's buffer). At corpus scale always
-   * pass a finite maxDegree (the declared queries use 1000); the
-   * uncapped default exists for exact small-graph law checks only.
+   * its true neighbor set) holds only for a finite cap. With
+   * `Long.MaxValue`, capK saturates at Int.MaxValue and a celebrity
+   * middle's full distinct neighbor set materializes in one boxed
+   * TreeSet buffer — a per-task OOM cliff the old self-join shape did
+   * not have (it blew up in wedge COUNT, not in a single group's
+   * buffer). At corpus scale pass a finite cap (the declared queries
+   * use 1000); uncapped is for exact small-graph law checks only.
    */
   def commonNeighborScores(edges: DataFrame, src: Column, dst: Column,
-      minCommon: Long, maxDegree: Long = Long.MaxValue): DataFrame = {
+      minCommon: Long, maxDegree: Long): DataFrame = {
     val e = graft.util.Barriers.statSafe(canonicalEdges(edges, src, dst))
     // ONE bounded groupBy replaces the former degree aggregate + degree
     // join + adjacency self-join (4 exchanges -> 2): a middle's sorted

@@ -87,8 +87,8 @@ object Dedup {
     * every member of an overflowing bucket additionally gets a LINEAR
     * "star" candidate pair against the bucket's minimum id, so a true
     * mega-duplicate group still collapses to one representative under
-    * [[nearDedup]] (verified by DedupSkewProbe with a 10k-member clone
-    * group) while the bucket's candidate volume stays O(|bucket|).
+    * [[nearDedup]] (a 10k-member clone group, SURVEY §16; PipelineSpec's
+    * hot-bucket case) while the bucket's candidate volume stays O(|bucket|).
     * Truncation degrades only which NON-star pairs are enumerated for
     * the pathological bucket. */
   val MaxLshBucket: Int = 4096
@@ -142,7 +142,7 @@ object Dedup {
     if (!capped) return (pairwise.distinct(), NoopFree)
     // OVERFLOW STARS: truncation alone leaves every beyond-cap member of a
     // mega-dup bucket in NO candidate pair — a 10k-member duplicate group
-    // would keep ~6k near-identical survivors (measured by DedupSkewProbe).
+    // would keep ~6k near-identical survivors (measured in r15, SURVEY §16).
     // For each overflowing bucket, emit the LINEAR star (bucket-min,
     // member) for every member instead: the group's canonical minimum gets
     // a verified pair with each clone, so a true mega-dup group collapses

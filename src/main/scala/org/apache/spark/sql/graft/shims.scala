@@ -17,6 +17,13 @@ object shims {
   def aggColumnDistinct(f: AggregateFunction): Column =
     ExpressionUtils.column(f.toAggregateExpression(isDistinct = true))
 
+  /** Blocks until every event posted to `sc`'s listener bus so far has
+    * been delivered (`listenerBus` is private[spark]): a count read after
+    * it is complete, and a sleep would both undercount and let late
+    * events land in the next measurement. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
+
   /** Spark's `WRONG_NUM_ARGS` analysis error (`QueryCompilationErrors` is private[sql]). */
   def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
     org.apache.spark.sql.errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)

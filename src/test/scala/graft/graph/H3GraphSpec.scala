@@ -364,4 +364,18 @@ class H3GraphSpec extends AnyFunSuite {
     assert(on(2000000L, 0) && !on(2000001L, 0))
     assert(!H3Graph.predsHintOn(spark, clustered = true, 1L, 1))
   }
+
+  test("round convergence predicates resolve their columns by name") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // fold schema in a different order than the loop builds it
+    val improved = H3Graph.improvedRow(StructType(Seq(StructField("__old", DoubleType),
+      StructField("src", LongType), StructField("cost", DoubleType), StructField("cell", LongType))))
+    assert(improved(Row(null, 1L, 5.0, 2L)))   // first reach
+    assert(improved(Row(6.0, 1L, 5.0, 2L)))    // strictly cheaper
+    assert(!improved(Row(5.0, 1L, 5.0, 2L)) && !improved(Row(4.0, 1L, 5.0, 2L)))
+    val active = H3Graph.walkActiveRow(StructType(Seq(StructField("cur", LongType),
+      StructField("path", ArrayType(LongType)), StructField("src", LongType))))
+    assert(active(Row(7L, Seq(7L), 3L)) && !active(Row(3L, Seq(7L, 3L), 3L)))
+  }
 }

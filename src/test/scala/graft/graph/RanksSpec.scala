@@ -69,10 +69,10 @@ class RanksSpec extends AnyFunSuite {
     def measured(iters: Int): Int = {
       // deterministic drain of the async listener bus: both measurements
       // must neither undercount nor inherit the other's late events
-      org.apache.spark.graft.TestBusShims.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.graft.shims.drainListenerBus(spark.sparkContext)
       shuffleStages.set(0)
       Ranks.pageRank(edges.toDF("s", "d").repartition(5), $"s", $"d", iters).collect()
-      org.apache.spark.graft.TestBusShims.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.graft.shims.drainListenerBus(spark.sparkContext)
       shuffleStages.get()
     }
     try {

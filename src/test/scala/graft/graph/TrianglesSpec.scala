@@ -89,7 +89,8 @@ class TrianglesSpec extends AnyFunSuite {
     } yield (u, v) -> ((common.size.toLong, common.toSeq.map(aaTerm).sum))).toMap
 
     val got = Triangles.commonNeighborScores(
-        edges.toDF("src", "dst").repartition(5), col("src"), col("dst"), minCommon = 3)
+        edges.toDF("src", "dst").repartition(5), col("src"), col("dst"), minCommon = 3,
+        maxDegree = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(got == want)
     assert(want.nonEmpty)

@@ -13,9 +13,11 @@ NEAR-duplicate groups (the realistic crawl shape) instead of exact clones;
 n_chars is recomputed. events keeps user_id (graph queries get a denser,
 not wider, graph - the skew-stress direction) and shifts event_id.
 
-This is a PERF REHEARSAL dataset: used by ScaleProbe-style runs, never by
-the correctness gate (oracle assumptions like pinned row counts are
-sf0.01-specific by design).
+This is a PERF REHEARSAL dataset: timed by `graft.Bench` runs with
+SPARK_GRAFT_SF_DIR=target/sf1.0 (plus SPARK_GRAFT_NOOP_TOP for the noop-sink
+column; each query's profile `rows` against an sf0.1 run gives the row
+factor), never by the correctness gate (oracle assumptions like pinned row
+counts are sf0.01-specific by design).
 """
 import sys
 
