@@ -27,7 +27,9 @@ object Bench {
   private[graft] def dropLeakedBlocks(spark: SparkSession): Unit =
     try spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
-    catch { case NonFatal(_) => () }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] WARN: leaked-block sweep failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
 
   /** One run of the fixed calibration workload: a deterministic CPU +
     * shuffle micro-job on synthetic data (no I/O, no SF dependence) —
@@ -181,8 +183,12 @@ object Bench {
     def timeOnce(pass: String, name: String, dir: String, on: Seq[(String, SparkSession)] = sessions,
         action: DataFrame => Long = _.count()): Seq[QueryRecord] =
       on.map { case (suffix, s) =>
-        val rec = profile.measure(fns(name)(s, dir))(action)
-        // outside the timed window: queries that cut lineage with
+        // one checkpoint scope per run, opened and closed outside the
+        // timed window: it records each iterative operator's regime and
+        // rounds, and releases the blocks the query's barriers pinned
+        val (rec0, loops) = graft.util.Checkpoints.recording(profile.measure(fns(name)(s, dir))(action))
+        val rec = rec0.copy(loops = loops)
+        // the sweep catches the rest: queries that cut lineage with a raw
         // localCheckpoint leave their blocks pinned in the block manager
         // for the session's lifetime; dropping them between queries keeps
         // the 150-query session's block manager from accumulating dead

@@ -16,13 +16,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the jobs/stages/tasks it launched with their summed task metrics, and
   * the driver gap — wall time during which no job was running (planning,
   * barrier bookkeeping, driver-side loops). `rows` is -1 when the run
-  * failed; `error` is then its exception class and message. */
+  * failed; `error` is then its exception class and message. `loops` are
+  * the iterative operators the run's checkpoint scope saw, each with its
+  * regime and rounds. */
 final case class QueryRecord(wallMs: Double, buildMs: Double, rows: Long,
     analysisMs: Long, optimizationMs: Long, planningMs: Long,
     jobs: Int, stages: Int, tasks: Int,
     taskRunMs: Long, schedDelayMs: Long, deserMs: Long, gcMs: Long, driverGapMs: Double,
     shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-    topJobs: Seq[(Long, String)], error: Option[Throwable]) {
+    topJobs: Seq[(Long, String)], error: Option[Throwable],
+    loops: Seq[graft.util.Checkpoints.Loop] = Nil) {
   def ok: Boolean = error.isEmpty
 
   def toJson: ListMap[String, Any] = ListMap(
@@ -33,7 +36,8 @@ final case class QueryRecord(wallMs: Double, buildMs: Double, rows: Long,
     "gc_ms" -> gcMs, "driver_gap_ms" -> driverGapMs,
     "shuffle_read_bytes" -> shuffleReadBytes, "shuffle_write_bytes" -> shuffleWriteBytes,
     "spill_bytes" -> spillBytes,
-    "top_jobs" -> topJobs.map { case (ms, site) => ListMap("ms" -> ms, "call_site" -> site) }) ++
+    "top_jobs" -> topJobs.map { case (ms, site) => ListMap("ms" -> ms, "call_site" -> site) },
+    "loops" -> loops.map(l => ListMap("op" -> l.op, "regime" -> l.regime, "rounds" -> l.rounds))) ++
     error.map(e => "error" -> QueryProfile.errorJson(e))
 }
 

@@ -3,6 +3,7 @@ package graft.df
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.util.{Barriers, Checkpoints}
 
 /**
  * C5: connected components of neighboring cells (reference
@@ -106,17 +107,17 @@ object H3Clusters {
         }
         var changed = true
         var iter = 0
-        // frees the superseded label generation once the round's action
-        // has materialized its successor (the final generation is never
-        // freed — the result join below reads it)
-        var freeLabels: () => Unit = () => ()
+        // the superseded label generation is released once the round's
+        // action has materialized its successor (the final generation
+        // stays — the result join below reads it)
+        var labelsGen: Option[DataFrame] = None
         while (changed && iter < maxIterations) {
           // the slim relaxed frame is barrier'd BEFORE the compression
           // self-join: with propagate's join tree on both sides, Catalyst's
           // size-only stats estimation multiplies the unknown-size leaves
           // into astronomically wide BigInts (minutes of Toom-Cook per
           // round); as a leaf, the self-join costs nothing to plan
-          val (relaxed, freeRelaxed) = graft.util.Barriers.statSafeFreeable(
+          val relaxed = Barriers.statSafe(
             propagate(labels, carryPrev = true))
           // checkpointDir upgrades every few rounds to a reliable
           // checkpoint (executor-loss-safe); see graft.util.Barriers.
@@ -127,10 +128,10 @@ object H3Clusters {
           val comp = compress(relaxed)
           val ci = comp.columns.indexOf("cluster")
           val pi = comp.columns.indexOf("__prev")
-          val (next, nChanged, freeNext) = graft.util.Barriers.roundBarrierCountingFreeable(
+          val (next, nChanged) = Barriers.roundBarrierCounting(
             comp, iter, checkpointDir)(r => r.get(ci) != r.get(pi))
-          freeRelaxed(); freeLabels()
-          freeLabels = freeNext
+          (relaxed +: labelsGen.toSeq).foreach(Checkpoints.release)
+          labelsGen = Some(next)
           labels = next.drop("__prev")
           changed = nChanged > 0
           iter += 1
@@ -139,6 +140,7 @@ object H3Clusters {
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"cellClusters stopped after maxIterations=$maxIterations with labels " +
               "still changing: clusters may be split; raise maxIterations")
+        Checkpoints.noteLoop("cellClusters", "none", iter)
     }
     joinOnKeys(df,
       labels.select((col(cellCol) +: valueCol.map(col).toSeq :+ col("cluster")): _*))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.CheckpointLayout
-import graft.util.Barriers
+import graft.util.{Barriers, Checkpoints}
 
 /**
  * Community detection by synchronous label propagation (Raghavan et al.
@@ -53,7 +53,7 @@ object Communities {
     // map-side-combined aggregates (the celebrity contract in the
     // scaladoc is untouched: the first shuffle still carries
     // (node, label) partial counts, never raw neighbor rows).
-    val (adj0, freeAdj0) = Barriers.statSafeFreeable(
+    val adj0 = Barriers.statSafe(
       e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b"))))
     // Gate on the SLIM side (one label row per node), not the adjacency —
@@ -62,35 +62,32 @@ object Communities {
     // distinct node frame IS the initial label frame, so the gate's
     // aggregate is reused, not redundant; its count also materializes
     // adj0, which round 1 needs anyway.
-    val (nodes0, freeNodes0) = graft.util.Barriers.statSafeFreeable(
-      adj0.select(col("a").as("node")).distinct())
+    val nodes0 = Barriers.statSafe(adj0.select(col("a").as("node")).distinct())
     val nNodes = nodes0.count()
-    val (adj, freeAdj, cluster) = CheckpointLayout.statSafeReclusterIfOver(
-      adj0, freeAdj0, measured = nNodes, key = "b")
-    // clustered regime: rounds are EAGER with the superseded generation's
-    // blocks freed each round, and a reliable checkpoint every
+    val (adj, regime) = CheckpointLayout.statSafeReclusterIfOver(
+      adj0, measured = nNodes, key = "b")
+    val cluster = regime.clustered
+    // clustered regime: rounds are EAGER with the superseded generation
+    // released each round, and a reliable checkpoint every
     // ReliableEvery-th round for executor-loss durability — the CC
     // discipline. Small regime keeps the lazy adaptive chain.
-    var freeLabels: () => Unit = () => ()
-    var labels =
+    // `labelsGen`: the frame the current label generation's barrier
+    // returned. nodes0 is already a stat-safe checkpoint in the small
+    // regime; the label frame is a trivial projection over it — a second
+    // barrier would only pin one more session-lifetime RDD
+    var labelsGen =
       if (cluster) {
-        val (l0, free0) = CheckpointLayout.statSafeClusteredBy(
-          nodes0, key = "node")
+        val l0 = CheckpointLayout.statSafeClusteredBy(nodes0, key = "node")
         l0.queryExecution.toRdd.count() // materialize, then drop the source
-        freeNodes0()
-        freeLabels = free0
-        l0.select(col("node"), col("node").as("label"))
-      } else
-        // nodes0 is already a stat-safe checkpoint; the label frame is a
-        // trivial projection over it — a second barrier would only pin
-        // one more session-lifetime RDD
-        nodes0.select(col("node"), col("node").as("label"))
+        Checkpoints.release(nodes0)
+        l0
+      } else nodes0
+    var labels = labelsGen.select(col("node"), col("node").as("label"))
     for (round <- 0 until iters) {
-      // slim-side hint (CheckpointLayout.slimHint): small regime = node
-      // count measured ≤ the cluster bound, so the label frame broadcasts
-      // by measurement and the adjacency never re-exchanges per round
-      val next = adj.join(CheckpointLayout.slimHint(labels, cluster),
-          adj("b") === labels("node"))
+      // slim-side hint: small regime = node count measured ≤ the cluster
+      // bound, so the label frame broadcasts by measurement and the
+      // adjacency never re-exchanges per round
+      val next = adj.join(regime.hint(labels), adj("b") === labels("node"))
         .select(adj("a").as("node"), col("label"))
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
         // arg-max by (count desc, label asc) == max of (c, -label)
@@ -98,16 +95,17 @@ object Communities {
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("label"))
       if (cluster) {
-        val (nl, free) = CheckpointLayout.roundBarrierKeepingLayout(next, round, checkpointDir)
-        freeLabels() // nl is eager: the generation it superseded is dead
-        freeLabels = free
+        val nl = CheckpointLayout.roundBarrierKeepingLayout(next, round, checkpointDir)
+        Checkpoints.release(labelsGen) // nl is eager: the generation it superseded is dead
+        labelsGen = nl
         labels = nl
       } else labels = Barriers.statSafe(next)
     }
     // clustered regime: the final labels generation is its own eager
     // checkpoint, so the adjacency's blocks are dead now (the small
-    // regime's lazy chain still reads adj — nothing to free there)
-    if (cluster) freeAdj()
+    // regime's lazy chain still reads adj — nothing to release there)
+    if (cluster) Checkpoints.release(adj)
+    Checkpoints.noteLoop("labelPropagation", regime.name, iters)
     labels
   }
 

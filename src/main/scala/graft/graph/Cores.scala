@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.util.Barriers
+import graft.pipeline.CheckpointLayout
+import graft.util.{Barriers, Checkpoints}
 
 /**
  * Bounded-round k-core peeling (Seidman 1983; the distributed peel of
@@ -44,18 +45,18 @@ object Cores {
   def kCore(edges: DataFrame, src: Column, dst: Column, k: Int,
       rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1 and rounds >= 1, got $k/$rounds")
-    var (e, freeE) = Barriers.statSafeFreeable(Triangles.canonicalEdges(edges, src, dst))
+    var e = Barriers.statSafe(Triangles.canonicalEdges(edges, src, dst))
     var prevRows = -1L
     var round = 0
     var fixpoint = false
+    var regime = CheckpointLayout.Regime(clustered = true)
     while (round < rounds && !fixpoint) {
       val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      val (keep, freeKeep) = Barriers.statSafeFreeable(
-        deg.filter(col("deg") >= k).select(col("n")))
-      // slim-side hint (CheckpointLayout.slimHint): this loop has no
-      // upfront regime gate (the edge frame only shrinks), so the previous
-      // round's measured row count stands in — round 0 runs unhinted, and
+      val keep = Barriers.statSafe(deg.filter(col("deg") >= k).select(col("n")))
+      // slim-side hint: this loop has no upfront regime gate (the edge
+      // frame only shrinks), so the previous round's measured row count
+      // stands in — round 0 runs unhinted (clustered = identity hint), and
       // from round 1 the keep set (≤ distinct nodes ≤ 2× the measured
       // edges) broadcasts when the survivors are measured under the
       // cluster bound. A shrinking frame can only ENTER the hinted regime.
@@ -64,22 +65,22 @@ object Cores {
       // set's broadcast once per round (the former per-side `.as(c)`
       // aliases made the subtrees canonically distinct and the broadcast
       // was built twice — the r16 advisor's finding).
-      val bound = graft.pipeline.CheckpointLayout.clusterMinRows(e.sparkSession)
-      val big = prevRows < 0 || bound <= 0 || prevRows > bound
-      val hintedKeep = graft.pipeline.CheckpointLayout.slimHint(keep, clustered = big)
-      val (next, nRows, freeNext) = Barriers.roundBarrierCountingFreeable(
+      if (prevRows >= 0) regime = CheckpointLayout.regime(e.sparkSession, prevRows)
+      val hintedKeep = regime.hint(keep)
+      val (next, nRows) = Barriers.roundBarrierCounting(
         e.join(hintedKeep, col("u") === col("n"), "leftsemi")
           .join(hintedKeep, col("v") === col("n"), "leftsemi")
           .select(col("u"), col("v")), round, checkpointDir)(_ => true)
       // next is materialized: the round's survivor set and the previous
-      // edge generation are dead (the final generation is never freed —
-      // the caller's result reads it)
-      freeKeep(); freeE()
-      e = next; freeE = freeNext
+      // edge generation are dead (the final generation stays — the
+      // caller's result reads it)
+      Seq(keep, e).foreach(Checkpoints.release)
+      e = next
       fixpoint = nRows == prevRows
       prevRows = nRows
       round += 1
     }
+    Checkpoints.noteLoop("kCore", regime.name, round)
     e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("degree"))
       .select(col("n").as("node"), col("degree"))

@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
 import scala.collection.mutable
+import graft.pipeline.CheckpointLayout
+import graft.pipeline.CheckpointLayout.Regime
+import graft.util.{Barriers, Checkpoints}
 
 /**
  * Graph operators over H3 cells (SURVEY.md §2.8, reference h3ron-graph):
@@ -499,41 +502,30 @@ object H3Graph {
     * `min(struct(cost, ...))` argmin sorts a null cost FIRST, letting it
     * beat real finite paths). The frontier's size is unknowable upfront,
     * so the edge-frame row count gates the layout regime as a proxy (see
-    * CheckpointLayout.ClusterLayoutMinRows). */
-  private def iterativeEdges(graph: DataFrame): (DataFrame, () => Unit, Boolean, Long) = {
-    val (e0, freeE0) = graft.util.Barriers.statSafeFreeable(
+    * CheckpointLayout.ClusterLayoutMinRows).
+    *
+    * The relax join's STATIC side (this edge table) takes the regime's
+    * hint: below the cluster bound the edge count is MEASURED ≤
+    * ClusterLayoutMinRows (≈ tens of MB of 3 longs), so the broadcast
+    * removes the per-hop edge-side shuffle stage (measured at sf0.1: p116
+    * ran 172 jobs for 0.18 s of parallel task work — the wall was stage
+    * scheduling). Hinting the STATIC side rather than the evolving
+    * frontier (the r16 shape) matters for the same reason: a frontier
+    * hint paid one broadcast-BUILD job per hop (the frontier changes
+    * every hop), while the edge broadcast is built once per materializing
+    * job and REUSED by every hop's join inside it (exchange reuse over
+    * the identical subtree). */
+  private def iterativeEdges(graph: DataFrame): (DataFrame, Regime, Long) = {
+    val e0 = Barriers.statSafe(
       graph.select(col("origin").as("__eo"), col("destination").as("__ed"),
         col("weight").cast("double").as("__ew"))
         .filter(col("__eo").isNotNull && col("__ed").isNotNull &&
           col("__ew").isNotNull))
     val measured = e0.count()
-    val (ec, freeEc, clustered) = graft.pipeline.CheckpointLayout.statSafeReclusterIfOver(
-      e0, freeE0, measured = measured, key = "__eo")
-    (ec, freeEc, clustered, measured)
+    val (ec, regime) = CheckpointLayout.statSafeReclusterIfOver(
+      e0, measured = measured, key = "__eo")
+    (ec, regime, measured)
   }
-
-  /** Small-regime broadcast hint for the relax join's STATIC side (the
-    * edge table), gated on the SAME measured regime decision as the edge
-    * layout: below the cluster bound the edge count is MEASURED ≤
-    * ClusterLayoutMinRows (≈ tens of MB of 3 longs), so the static hint
-    * removes the per-hop edge-side shuffle stage AQE would otherwise
-    * materialize before its own runtime broadcast decision (measured at
-    * sf0.1: p116 ran 172 jobs for 0.18 s of parallel task work — the wall
-    * was stage scheduling). Hinting the STATIC side rather than the
-    * evolving frontier (the r16 shape) matters for the same reason: a
-    * frontier hint paid one broadcast-BUILD job per hop (the frontier
-    * changes every hop), while the edge broadcast is built once per
-    * materializing job and REUSED by every hop's join inside it
-    * (exchange reuse over the identical subtree). Past the bound the
-    * hint would broadcast an unbounded edge table: clustered regime
-    * keeps the co-partitioned streaming join, hint-free.
-    * `graft.sssp.frontierHint=false` restores the unhinted small-regime
-    * joins (A/B instrumentation; the default is the measured winner). */
-  private def frontierHint(spark: org.apache.spark.sql.SparkSession,
-      clustered: Boolean): DataFrame => DataFrame =
-    if (clustered ||
-      spark.conf.get("graft.sssp.frontierHint", "true") != "true") identity
-    else broadcast
 
   /** The SSSP rounds' convergence test over a fold-with-`__old` row: the
     * row improved its cell's best cost (a first reach, or a strictly
@@ -551,7 +543,7 @@ object H3Graph {
     r => r.getLong(src) != r.getLong(cur)
   }
 
-  /** [[frontierHint]] for the walk-reconstruction join's static side (the
+  /** The regime's hint for the walk-reconstruction join's static side (the
     * predecessor table): bounded by |nodes| × |origins| rows, and
     * |origins| is CALLER-controlled — a small-regime graph with a large
     * origin set could force a multi-GB static broadcast AQE's runtime
@@ -563,11 +555,10 @@ object H3Graph {
     * broadcasting the WALK side (bounded by the origins × destinations
     * pair set — always slim), one build per hop. */
   private[graph] def predsHintOn(spark: org.apache.spark.sql.SparkSession,
-      clustered: Boolean, measuredEdges: Long, nOrigins: Int): Boolean = {
+      regime: Regime, measuredEdges: Long, nOrigins: Int): Boolean = {
     val budget = spark.conf.get("graft.sssp.frontierRowBudget", "4000000").toLong
-    !clustered && // by division: the product could overflow to a passing negative
-      measuredEdges <= budget / (2L * math.max(nOrigins, 1)) &&
-      spark.conf.get("graft.sssp.frontierHint", "true") == "true"
+    !regime.clustered && // by division: the product could overflow to a passing negative
+      measuredEdges <= budget / (2L * math.max(nOrigins, 1))
   }
 
   def shortestPathsIterative(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
@@ -582,19 +573,18 @@ object H3Graph {
     // so every hop's frontier⋈edges join streams it in place — no
     // per-hop exchange or sort of the big side; the frontier (slim) is
     // the only thing that moves. Stats stay dropped in both regimes.
-    val (edges0, freeEdges, clustered, measuredEdges) = iterativeEdges(graph)
+    val (edges0, regime, measuredEdges) = iterativeEdges(graph)
     // static-side hint: built once per materializing job, reused by every
-    // hop's relax join inside it — see frontierHint
-    val edges = frontierHint(spark, clustered)(edges0)
-    var best = origins.distinct.toDF("cell")
-      .select(col("cell"), col("cell").as("src"), lit(0.0).as("cost"))
-      .localCheckpoint(false)
+    // hop's relax join inside it (see iterativeEdges)
+    val edges = regime.hint(edges0)
+    var best = Barriers.localCheckpoint(origins.distinct.toDF("cell")
+      .select(col("cell"), col("cell").as("src"), lit(0.0).as("cost")))
     var frontier = best
     var round = 0
     var converged = false
-    // frees the superseded fold generation's blocks (no-op before round 1;
-    // the FINAL generation is never freed — the caller's result reads it)
-    var freeBest: () => Unit = () => ()
+    // the current fold generation, released once its successor has
+    // materialized (the FINAL generation stays — the caller's result reads it)
+    var bestGen = best
     def relax(f: DataFrame): DataFrame =
       f.join(edges, col("cell") === col("__eo"))
         .select(col("__ed").as("cell"), col("src"), (col("cost") + col("__ew")).as("cost"))
@@ -630,12 +620,11 @@ object H3Graph {
       // plan depth outweighs the saved barriers.
       var acc = best
       var front = frontier
-      var freeIntermediates: List[() => Unit] = Nil
-      for (_ <- 1 until hopsPerRound) {
-        val (f, free) = graft.util.Barriers.statSafeFreeable(fold(acc, relax(front)))
-        freeIntermediates ::= free
+      val intermediates = (1 until hopsPerRound).map { _ =>
+        val f = Barriers.statSafe(fold(acc, relax(front)))
         front = improvedOf(f)
         acc = bestOf(f)
+        f
       }
       // ONE barrier materializes the round: the fold-with-__old frame is
       // checkpointed (reliable every few rounds when checkpointDir is
@@ -645,15 +634,14 @@ object H3Graph {
       // projections of its blocks. Previously the frontier was a second
       // checkpoint fed by a per-round join against the best table.
       val folded = fold(acc, relax(front))
-      val (ff, nImproved, freeF) = graft.util.Barriers.roundBarrierCountingFreeable(
+      val (ff, nImproved) = Barriers.roundBarrierCounting(
         folded, round, checkpointDir)(improvedRow(folded.schema))
       // that action materialized ff; every generation it superseded — the
       // previous round's fold and this round's intra-round intermediates —
-      // is dead and its blocks can be freed. Blocks held at any moment:
+      // is dead and its blocks can be released. Blocks held at any moment:
       // the current fold generation, not one per round.
-      freeIntermediates.foreach(_())
-      freeBest()
-      freeBest = freeF
+      (intermediates :+ bestGen).foreach(Checkpoints.release)
+      bestGen = ff
       frontier = improvedOf(ff)
       converged = nImproved == 0L
       best = bestOf(ff)
@@ -666,7 +654,8 @@ object H3Graph {
           "bounds; raise maxRounds")
     // the result's lineage reads only the final fold's checkpoint blocks
     // (best is a projection of them): the edge table is dead
-    freeEdges()
+    Checkpoints.release(edges0)
+    Checkpoints.noteLoop("shortestPathsIterative", regime.name, round)
     val dests = destinations.distinct.toDF("cell")
     best.join(broadcast(dests), "cell")
       .select(col("src").as("origin"), col("cell").as("destination"), col("cost"))
@@ -697,18 +686,17 @@ object H3Graph {
     // so every hop's frontier⋈edges join streams it in place — no
     // per-hop exchange or sort of the big side; the frontier (slim) is
     // the only thing that moves. Stats stay dropped in both regimes.
-    val (edges0, freeEdges, clustered, measuredEdges) = iterativeEdges(graph)
+    val (edges0, regime, measuredEdges) = iterativeEdges(graph)
     // static-side hint: built once per materializing job, reused by every
-    // hop's relax join inside it — see frontierHint
-    val edges = frontierHint(spark, clustered)(edges0)
-    var best = origins.distinct.toDF("cell")
+    // hop's relax join inside it (see iterativeEdges)
+    val edges = regime.hint(edges0)
+    var best = Barriers.localCheckpoint(origins.distinct.toDF("cell")
       .select(col("cell"), col("cell").as("src"), lit(0.0).as("cost"),
-        lit(null).cast("long").as("pred"))
-      .localCheckpoint(false)
+        lit(null).cast("long").as("pred")))
     var frontier = best
     var round = 0
     var converged = false
-    var freeBest: () => Unit = () => ()
+    var bestGen = best
     def relax(f: DataFrame): DataFrame =
       f.join(edges, col("cell") === col("__eo"))
         .select(col("__ed").as("cell"), col("src"),
@@ -745,22 +733,20 @@ object H3Graph {
       // (argmin rides the same fold)
       var acc = best
       var front = frontier
-      var freeIntermediates: List[() => Unit] = Nil
-      for (_ <- 1 until hopsPerRound) {
-        val (f, free) = graft.util.Barriers.statSafeFreeable(fold(acc, relax(front)))
-        freeIntermediates ::= free
+      val intermediates = (1 until hopsPerRound).map { _ =>
+        val f = Barriers.statSafe(fold(acc, relax(front)))
         front = improvedOf(f)
         acc = bestOf(f)
+        f
       }
       // one barrier per round: best and frontier are projections of the
       // fold-with-__old checkpoint, the convergence count rides its
       // materializing job (see [[shortestPathsIterative]])
       val folded = fold(acc, relax(front))
-      val (ff, nImproved, freeF) = graft.util.Barriers.roundBarrierCountingFreeable(
+      val (ff, nImproved) = Barriers.roundBarrierCounting(
         folded, round, checkpointDir)(improvedRow(folded.schema))
-      freeIntermediates.foreach(_())
-      freeBest()
-      freeBest = freeF
+      (intermediates :+ bestGen).foreach(Checkpoints.release)
+      bestGen = ff
       frontier = improvedOf(ff)
       converged = nImproved == 0L
       best = bestOf(ff)
@@ -772,7 +758,7 @@ object H3Graph {
           "the frontier still active: costs may be suboptimal upper bounds " +
           "(the walk law cannot detect this — the walk sum matches the " +
           "suboptimal cost); raise maxRounds")
-    freeEdges()
+    Checkpoints.release(edges0)
     // NOTE on fold's argmin vs the cost-only fold: `struct(cost, pred)`
     // ordering compares cost first, so the settled costs are identical to
     // [[shortestPathsIterative]] (spec-pinned); pred adds one column of
@@ -780,13 +766,11 @@ object H3Graph {
     val dests = destinations.distinct.toDF("cell")
     // backward walk: one row per reached (src, destination); `cur` is the
     // cell whose predecessor extends the walk next; done when cur == src
-    var walk = best.join(broadcast(dests), "cell")
+    var walk = Barriers.localCheckpoint(best.join(broadcast(dests), "cell")
       .select(col("src"), col("cell").as("destination"), col("cost"),
-        col("cell").as("cur"), array(col("cell")).as("path"))
-      .localCheckpoint(false)
+        col("cell").as("cur"), array(col("cell")).as("path")))
     var active = 1L
     var wround = 0
-    var freeWalk: () => Unit = () => ()
     val preds0 = best.select(col("cell").as("__pc"), col("src").as("__ps"),
       col("pred").as("__pp"))
     // Which side of the pred-hop join broadcasts: the STATIC pred table
@@ -794,7 +778,7 @@ object H3Graph {
     // every hop inside it — see predsHintOn), else the evolving walk
     // side (bounded by the origins × destinations pair set — always
     // slim, but it changes per hop so each hop pays its own build job).
-    val predsB = predsHintOn(spark, clustered, measuredEdges, origins.distinct.size)
+    val predsB = predsHintOn(spark, regime, measuredEdges, origins.distinct.size)
     val preds = if (predsB) broadcast(preds0) else preds0
     // one backward pred-hop; done rows (cur == src) pass through unchanged,
     // so composing the step is idempotent past the origin
@@ -810,10 +794,9 @@ object H3Graph {
       // extra hops are additional broadcast joins inside the SAME job —
       // rounds (and their driver-side barrier latency) halve at equal work
       val stepped = (1 to hopsPerRound).foldLeft(walk)((w, _) => step(w))
-      val (nw, nActive, freeNw) = graft.util.Barriers.roundBarrierCountingFreeable(
+      val (nw, nActive) = Barriers.roundBarrierCounting(
         stepped, wround, checkpointDir)(walkActiveRow(stepped.schema))
-      freeWalk()
-      freeWalk = freeNw
+      Checkpoints.release(walk)
       walk = nw
       active = nActive
       wround += 1
@@ -823,7 +806,9 @@ object H3Graph {
         "(cyclic predecessor chain would indicate a relaxation bug)")
     // the walk table is materialized (its own checkpoint); the best-cost
     // generation that fed the reconstruction is dead
-    freeBest()
+    Checkpoints.release(bestGen)
+    Checkpoints.noteLoop("shortestPathsIterativePaths", regime.name, round)
+    Checkpoints.noteLoop("shortestPathsIterativePaths.walk", regime.name, wround)
     walk.select(col("src").as("origin"), col("destination"), col("cost"), col("path"))
   }
 

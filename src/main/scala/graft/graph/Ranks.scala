@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.CheckpointLayout
-import graft.util.Barriers
+import graft.util.{Barriers, Checkpoints}
 
 /**
  * Link-graph authority ranking — the URL/domain-ranking step of a crawl
@@ -37,7 +37,7 @@ object Ranks {
   def pageRank(edges: DataFrame, src: Column, dst: Column, iters: Int,
       dampNum: Long = 85L, dampDen: Long = 100L,
       checkpointDir: Option[String] = None): DataFrame =
-    rankLoop(edges, src, dst, iters, dampNum, dampDen, checkpointDir) { n =>
+    rankLoop("pageRank", edges, src, dst, iters, dampNum, dampDen, checkpointDir) { n =>
       (lit(1000000000L / n), lit(((dampDen - dampNum) * 1000000000L) / (dampDen * n)))
     }
 
@@ -48,7 +48,7 @@ object Ranks {
     * stale broadcast inside the loop. `mkInitTele` receives the node
     * count and returns the (initial rank, per-node teleport)
     * expressions — the ONLY place the two ranks differ. */
-  private def rankLoop(edges: DataFrame, src: Column, dst: Column, iters: Int,
+  private def rankLoop(op: String, edges: DataFrame, src: Column, dst: Column, iters: Int,
       dampNum: Long, dampDen: Long, checkpointDir: Option[String] = None)(
       mkInitTele: Long => (Column, Column)): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -65,74 +65,66 @@ object Ranks {
     // every round's two joins co-partitioned: the ONLY per-round exchange
     // is the map-side-combined contribution sum. Stats are dropped at
     // every barrier in both regimes (the statSafe contract).
-    val (e0, freeE0) = Barriers.statSafeFreeable(
+    val e0 = Barriers.statSafe(
       edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
         // a NULL endpoint is not an edge (the other graph ops drop them
         // via canonicalEdges' null-propagating comparisons; same contract)
         .filter(col("src").isNotNull && col("dst").isNotNull)
         .distinct())
-    val (nodes0, freeNodes0) = Barriers.statSafeFreeable(
+    val nodes0 = Barriers.statSafe(
       e0.select(col("src").as("node")).unionAll(e0.select(col("dst").as("node")))
         .distinct())
     val n = nodes0.count()
     // empty graph: no nodes to rank (and the teleport would divide by 0).
     // nodes0.count() has already materialized e0's checkpoint blocks, and
-    // the returned frame reads only nodes0 — free e0 here or its blocks
+    // the returned frame reads only nodes0 — release e0 here or its blocks
     // stay pinned for the session (nodes0 must stay: the result reads it).
     if (n == 0L) {
-      freeE0()
+      Checkpoints.release(e0)
       return nodes0.select(col("node"), col("node").as("rank_e9"))
     }
-    val (e, freeE, cluster) = CheckpointLayout.statSafeReclusterIfOver(
-      e0, freeE0, measured = n, key = "src")
-    val (nodes, freeNodes, _) = CheckpointLayout.statSafeReclusterIfOver(
-      nodes0, freeNodes0, measured = n, key = "node")
+    val (e, regime) = CheckpointLayout.statSafeReclusterIfOver(e0, measured = n, key = "src")
+    val (nodes, _) = CheckpointLayout.statSafeReclusterIfOver(nodes0, measured = n, key = "node")
+    val cluster = regime.clustered
     val degFrame = e.withColumn("deg",
       count(lit(1)).over(Window.partitionBy(col("src"))))
-    val (withDeg, freeWithDeg) =
+    val withDeg =
       if (cluster) CheckpointLayout.statSafeKeepingLayout(degFrame)
-      else (Barriers.statSafe(degFrame), () => ())
+      else Barriers.statSafe(degFrame)
     val (init, tele) = mkInitTele(n)
-    // clustered regime: rounds are EAGER with the superseded generation's
-    // blocks freed each round (a lazy chain pins every generation for the
+    // clustered regime: rounds are EAGER with the superseded generation
+    // released each round (a lazy chain pins every generation for the
     // session) and a reliable checkpoint every ReliableEvery-th round for
     // executor-loss durability — the CC discipline. Small regime keeps
     // the lazy adaptive chain (one job, broadcasts per round).
-    var freeRanks: () => Unit = () => ()
     var ranks =
-      if (cluster) {
-        val (r0, free0) = CheckpointLayout.statSafeKeepingLayout(
-          nodes.select(col("node"), init.as("r")))
-        freeRanks = free0
-        r0
-      } else Barriers.statSafe(nodes.select(col("node"), init.as("r")))
+      if (cluster) CheckpointLayout.statSafeKeepingLayout(nodes.select(col("node"), init.as("r")))
+      else Barriers.statSafe(nodes.select(col("node"), init.as("r")))
     for (round <- 0 until iters) {
-      // slim-side hints (CheckpointLayout.slimHint): in the small regime
-      // the rank frame (|nodes| rows, 2 longs) and the aggregated contrib
-      // frame are broadcast-safe by measurement — without the hint every
-      // round re-exchanges the EDGE frame for the contrib join (AQE only
-      // broadcasts after materializing the big side's shuffle stage)
-      val contrib = withDeg.join(CheckpointLayout.slimHint(ranks, cluster),
-          withDeg("src") === ranks("node"))
+      // slim-side hints: in the small regime the rank frame (|nodes|
+      // rows, 2 longs) and the aggregated contrib frame are broadcast-safe
+      // by measurement — without the hint every round re-exchanges the
+      // EDGE frame for the contrib join (AQE only broadcasts after
+      // materializing the big side's shuffle stage)
+      val contrib = withDeg.join(regime.hint(ranks), withDeg("src") === ranks("node"))
         .select(col("dst").as("node"),
           expr(s"(r * $dampNum) div ($dampDen * deg)").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
-      val next = nodes.join(CheckpointLayout.slimHint(contrib, cluster),
-          Seq("node"), "left")
+      val next = nodes.join(regime.hint(contrib), Seq("node"), "left")
         .select(col("node"), (tele + coalesce(col("s"), lit(0L))).as("r"))
       if (cluster) {
-        val (nr, free) = CheckpointLayout.roundBarrierKeepingLayout(next, round, checkpointDir)
-        freeRanks() // nr is eager: the generation it superseded is dead
-        freeRanks = free
+        val nr = CheckpointLayout.roundBarrierKeepingLayout(next, round, checkpointDir)
+        Checkpoints.release(ranks) // nr is eager: the generation it superseded is dead
         ranks = nr
       } else ranks = Barriers.statSafe(next)
     }
     if (cluster) {
       // the final ranks generation is its own eager checkpoint: the static
       // frames are dead and their blocks can be released now (the small
-      // regime's lazy chain still reads them — nothing to free there)
-      freeE(); freeNodes(); freeWithDeg()
+      // regime's lazy chain still reads them — nothing to release there)
+      Seq(e, nodes, withDeg).foreach(Checkpoints.release)
     }
+    Checkpoints.noteLoop(op, regime.name, iters)
     ranks.select(col("node"), col("r").as("rank_e9"))
   }
 
@@ -154,7 +146,8 @@ object Ranks {
     require(seeds.nonEmpty, "need a non-empty seed set")
     val teleE9 = ((dampDen - dampNum) * 1000000000L) / (dampDen * seeds.length)
     def isSeed = col("node").isin(seeds: _*)
-    rankLoop(edges, src, dst, iters, dampNum, dampDen, checkpointDir) { _ =>
+    rankLoop("personalizedPageRank", edges, src, dst, iters, dampNum, dampDen,
+        checkpointDir) { _ =>
       (when(isSeed, lit(1000000000L / seeds.length)).otherwise(lit(0L)),
         when(isSeed, lit(teleE9)).otherwise(lit(0L)))
     }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.TextOps.md5Long
-import graft.util.Barriers
+import graft.pipeline.CheckpointLayout
+import graft.util.{Barriers, Checkpoints}
 
 /**
  * Deterministic random walks on a link graph — the corpus-generation
@@ -49,7 +50,7 @@ object Walks {
     // joins (degree lookup, then neighbor pick on the SAME current-node
     // key) stream the static sides in place, so a step's only exchange
     // is the walk frame moving to its new key.
-    val (und0, freeUnd0) = Barriers.statSafeFreeable(
+    val und0 = Barriers.statSafe(
       e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b"))))
     // Gate on the SLIM side (one walk row per node), not the adjacency —
@@ -57,12 +58,10 @@ object Walks {
     // on dense graphs. The distinct node frame IS the walk-init frame,
     // so the gate's aggregate is reused, not redundant; its count also
     // materializes und0, which the degree/adjacency builds need anyway.
-    val (nodes0, freeNodes0) = Barriers.statSafeFreeable(
-      und0.select(col("a").as("walk_id")).distinct())
+    val nodes0 = Barriers.statSafe(und0.select(col("a").as("walk_id")).distinct())
     val nNodes = nodes0.count()
-    val (und, freeUnd, cluster) =
-      graft.pipeline.CheckpointLayout.statSafeReclusterIfOver(
-        und0, freeUnd0, measured = nNodes, key = "a")
+    val (und, regime) = CheckpointLayout.statSafeReclusterIfOver(und0, measured = nNodes, key = "a")
+    val cluster = regime.clustered
     // Unlike the round loops (PR/LPA/CC/SSSP), walks materializes no
     // per-round generations — the steps are a fixed-depth lazy join tree
     // over three STATIC checkpoints (adj/deg/w0). The executor-loss
@@ -73,14 +72,12 @@ object Walks {
     // same cadence contract the loops expose.
     def barrier(df: DataFrame): DataFrame =
       if (cluster) {
-        if (checkpointDir.isDefined) {
-          val (ck, _) = graft.pipeline.CheckpointLayout.roundBarrierKeepingLayout(
-            df, Barriers.ReliableEvery - 1, checkpointDir)
-          ck
-        } else {
+        if (checkpointDir.isDefined)
+          CheckpointLayout.roundBarrierKeepingLayout(df, Barriers.ReliableEvery - 1, checkpointDir)
+        else {
           // adj/deg live in the result's lineage (every step reads them);
-          // materialize now so the clustered und copy can be freed below
-          val (ck, _) = graft.pipeline.CheckpointLayout.statSafeKeepingLayout(df)
+          // materialize now so the clustered und copy can be released below
+          val ck = CheckpointLayout.statSafeKeepingLayout(df)
           ck.queryExecution.toRdd.count()
           ck
         }
@@ -93,30 +90,25 @@ object Walks {
 
     var w: DataFrame =
       if (cluster) {
-        // w0 lives in the result's lineage (step 1 reads it) — never
-        // freed here, but any fallback inner boundary (held tail) is
-        // releasable; once w0 is materialized the now-dead source copies
-        // can go too: nodes0, and (adj/deg being materialized above) the
-        // clustered und copy
-        // nodes0 is already stat-safe (statSafeFreeable re-wrap), so the
-        // plain held variant suffices here
-        val (w0c, w0Held) = graft.pipeline.CheckpointLayout.clusteredByHeld(
-          nodes0, key = "walk_id")
+        // w0 lives in the result's lineage (step 1 reads it), so it stays;
+        // once it is materialized the now-dead source copies can go:
+        // nodes0, and (adj/deg being materialized above) the clustered
+        // und copy. nodes0 is already stat-safe, so plain clusteredBy
+        // suffices here.
+        val w0c = CheckpointLayout.clusteredBy(nodes0, key = "walk_id")
         val w0 =
           if (checkpointDir.isDefined) {
-            // durable variant: the reliable copy reads files, so EVERY
-            // local block behind it (the clustered copy and any fallback
-            // boundary) is dead once it materializes
-            val (ck, _) = graft.pipeline.CheckpointLayout.roundBarrierKeepingLayout(
+            // durable variant: the reliable copy reads files, so every
+            // local block behind it is dead once it materializes
+            val ck = CheckpointLayout.roundBarrierKeepingLayout(
               w0c, Barriers.ReliableEvery - 1, checkpointDir)
-            w0Held.foreach(f => graft.pipeline.CheckpointLayout.freeThunk(f)())
+            Checkpoints.release(w0c)
             ck
           } else {
             w0c.queryExecution.toRdd.count()
-            w0Held.drop(1).foreach(f => graft.pipeline.CheckpointLayout.freeThunk(f)())
             w0c
           }
-        freeNodes0(); freeUnd()
+        Seq(nodes0, und).foreach(Checkpoints.release)
         w0.select(col("walk_id"), col("walk_id").as("s0"))
       } else nodes0.select(col("walk_id"), col("walk_id").as("s0"))
     for (t <- 1 to steps) {
@@ -130,6 +122,7 @@ object Walks {
         .withColumn(s"s$t", col("b"))
         .drop("a", "b", "rn", "__idx")
     }
+    Checkpoints.noteLoop("walks", regime.name, steps)
     w
   }
 

@@ -274,17 +274,17 @@ object Bpe {
       mergesPerBarrier: Int = 8): Model = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(mergesPerBarrier >= 1, s"mergesPerBarrier must be >= 1, got $mergesPerBarrier")
-    val (vocab0, freeVocab0) = graft.util.Barriers.statSafeFreeable(
+    val vocab0 = graft.util.Barriers.statSafe(
       wordCounts.select(col("w"),
         concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("s"),
         col("cnt").cast("long").as("cnt")))
     var vocab = vocab0
-    // generation bookkeeping: `freeGen` frees the CURRENT barrier
-    // generation's blocks; `freeSuperseded` the one it replaced, callable
-    // only after a job has materialized the current (lazy) checkpoint —
-    // the next round's argmax is that job
-    var freeGen: () => Unit = freeVocab0
-    var freeSuperseded: () => Unit = () => ()
+    // generation bookkeeping: `gen` is the CURRENT barrier generation;
+    // `superseded` the one it replaced, releasable only after a job has
+    // materialized the current (lazy) checkpoint — the next round's
+    // argmax is that job
+    var gen = vocab0
+    var superseded: Option[DataFrame] = None
     val merges = Seq.newBuilder[Merge]
     var rank = 1
     var exhausted = false
@@ -294,7 +294,7 @@ object Bpe {
         .orderBy(col("pc").desc, col("l"), col("r")).limit(1).collect()
       // that job materialized the current generation's lazy checkpoint:
       // the generation it superseded is dead
-      freeSuperseded(); freeSuperseded = () => ()
+      superseded.foreach(graft.util.Checkpoints.release); superseded = None
       if (top.isEmpty) exhausted = true
       else {
         val l = top(0).getString(0)
@@ -303,16 +303,15 @@ object Bpe {
         vocab = vocab.withColumn("s", applyMerge(col("s"), l, r))
         sinceBarrier += 1
         if (sinceBarrier >= mergesPerBarrier && rank < nMerges) {
-          val (cut, freeCut) = graft.util.Barriers.statSafeFreeable(vocab)
-          vocab = cut
-          freeSuperseded = freeGen
-          freeGen = freeCut
+          vocab = graft.util.Barriers.statSafe(vocab)
+          superseded = Some(gen)
+          gen = vocab
           sinceBarrier = 0
         }
         rank += 1
       }
     }
-    // final vocab rides its last barrier generation (never freed here —
+    // final vocab rides its last barrier generation (never released here —
     // the caller's Model reads it); one more lazy cut bounds the trailing
     // applyMerge chain
     Model(merges.result(), vocab.localCheckpoint(false))

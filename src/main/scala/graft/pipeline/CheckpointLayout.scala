@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
+import graft.util.Checkpoints
+
 /** Checkpoint a frame so that a `HashPartitioning(key)` + in-partition
   * sort survives into every downstream consumer — the layout a frame
   * needs when it is re-read many times clustered by the same key (an
@@ -75,7 +77,7 @@ object CheckpointLayout {
   /** [[ClusterLayoutMinRows]], overridable per session via the
     * `graft.layout.clusterMinRows` conf (0 forces the clustered regime —
     * used by plan-shape specs; a huge value disables it). */
-  def clusterMinRows(spark: SparkSession): Long =
+  private def clusterMinRows(spark: SparkSession): Long =
     spark.conf.get("graft.layout.clusterMinRows", ClusterLayoutMinRows.toString).toLong
 
   /** AQE off for the capture via a THROWAWAY SESSION CLONE, never by
@@ -104,7 +106,7 @@ object CheckpointLayout {
   /** Core build: tag-shielded clustering checkpoint. Returns the
     * renamed-back frame plus EVERY checkpoint Dataset created (the
     * fallback's inner boundary is unreachable from the returned frame's
-    * plan, so the caller's free thunk must hold it explicitly or its
+    * plan, so the scope must own it under the returned frame or its
     * blocks leak for the session). */
   private def clusteredByImpl(df: DataFrame, key: String,
       distinct: Boolean): (DataFrame, Seq[DataFrame]) = {
@@ -139,18 +141,10 @@ object CheckpointLayout {
     * by `key` guaranteed visible downstream. Lazy (materializes on first
     * action), like `localCheckpoint(eager = false)`. `distinct` dedups
     * on the same shuffle. */
-  def clusteredBy(df: DataFrame, key: String, distinct: Boolean = false): DataFrame =
-    clusteredByImpl(df, key, distinct)._1
-
-  /** [[clusteredBy]] that also returns every checkpoint Dataset created
-    * (head = the returned frame's own checkpoint; a second element is the
-    * fallback's inner boundary, unreachable from the returned plan).
-    * Callers that materialize the frame and keep it for their result's
-    * lifetime can still free the TAIL to avoid leaking the fallback's
-    * inner copy. */
-  private[graft] def clusteredByHeld(df: DataFrame, key: String,
-      distinct: Boolean = false): (DataFrame, Seq[DataFrame]) =
-    clusteredByImpl(df, key, distinct)
+  def clusteredBy(df: DataFrame, key: String, distinct: Boolean = false): DataFrame = {
+    val (out, held) = clusteredByImpl(df, key, distinct)
+    Checkpoints.ownLeaves(out, held)
+  }
 
   /** [[clusteredBy]] for the STATIC frame of an iterative loop: the
     * layout-true checkpoint with its origin statistics DROPPED (the
@@ -159,8 +153,8 @@ object CheckpointLayout {
     * static planner broadcast-build the big side of every round's join;
     * with no origin stats the LogicalRDD reports
     * `spark.sql.defaultSizeInBytes`, so only AQE's exact runtime sizes
-    * can still elect a broadcast) — plus the unpersist thunk for ALL
-    * checkpoint blocks created (including the fallback's inner boundary).
+    * can still elect a broadcast). The open scope owns ALL checkpoint
+    * blocks created, the fallback's inner boundary included.
     *
     * The payoff at scale: a loop that joins a static big frame against a
     * slim evolving frame every round stops re-shuffling AND re-sorting
@@ -169,51 +163,62 @@ object CheckpointLayout {
     * replaces O(rounds) of them.
     */
   def statSafeClusteredBy(df: DataFrame, key: String,
-      distinct: Boolean = false): (DataFrame, () => Unit) = {
+      distinct: Boolean = false): DataFrame = {
     val (out, held) = clusteredByImpl(df, key, distinct)
-    (org.apache.spark.sql.graft.shims.dropOriginStats(out), freeAll(held))
+    Checkpoints.ownLeaves(org.apache.spark.sql.graft.shims.dropOriginStats(out), held)
   }
 
-  /** Regime-gated broadcast hint for a loop's SLIM evolving side (labels,
-    * ranks, keep-sets — the r16 SSSP frontier-hint generalized): in the
-    * small regime the loop's inputs are MEASURED at or under
-    * [[ClusterLayoutMinRows]] (≤ 1M rows of 2-3 longs ≈ tens of MB), so
-    * the slim side is broadcast-safe by measurement and the static hint
-    * removes the per-round big-side exchange AQE would otherwise
-    * materialize before its own runtime broadcast decision (measured on
-    * SSSP: the wall of a tiny-regime loop is stage scheduling, not task
-    * work). In the clustered regime the hint would broadcast an unbounded
-    * frame — identity keeps the co-partitioned streaming join.
-    * `graft.loops.slimHint=false` restores the unhinted small-regime plans
-    * (A/B instrumentation; the default is the measured winner). */
-  def slimHint(df: DataFrame, clustered: Boolean): DataFrame =
-    if (clustered ||
-      df.sparkSession.conf.get("graft.loops.slimHint", "true") != "true") df
-    else org.apache.spark.sql.functions.broadcast(df)
+  /** The small/large decision of an iterative loop, made once from a
+    * measured row count against [[clusterMinRows]]. In the clustered
+    * regime the loop's static frames are re-laid-out by join key and its
+    * joins stream co-partitioned; in the small regime they stay
+    * fully adaptive. */
+  final case class Regime(clustered: Boolean) {
+    def name: String = if (clustered) "clustered" else "small"
+
+    /** Broadcast hint for the side of a per-round join the small regime
+      * MEASURED at or under [[ClusterLayoutMinRows]] (≤ 1M rows of 2-3
+      * longs ≈ tens of MB — broadcast-safe by measurement): a loop's slim
+      * evolving side (PR ranks, LPA labels, the k-core keep set) or
+      * SSSP's static edge table. It removes the per-round big-side
+      * exchange AQE would otherwise materialize before its own runtime
+      * broadcast decision — the wall of a small-regime loop is stage
+      * scheduling, not task work (A/B 1.03-1.17×, OPTIMIZATION_r16.md
+      * §§1,4). In the clustered regime the hint would broadcast an
+      * unbounded frame, so it is the identity and the join keeps its
+      * co-partitioned streaming plan. CC stays unhinted by measurement
+      * (see `Dedup.connectedComponents`). */
+    def hint(df: DataFrame): DataFrame =
+      if (clustered) df else org.apache.spark.sql.functions.broadcast(df)
+  }
+
+  /** The regime for a loop whose gating side measured `measured` rows.
+    * Bound 0 FORCES the clustered regime (the documented conf contract
+    * the plan-shape and parity specs rely on), even for an empty frame. */
+  def regime(spark: SparkSession, measured: Long): Regime = {
+    val bound = clusterMinRows(spark)
+    Regime(clustered = bound <= 0 || measured > bound)
+  }
 
   /** The dual-regime step every loop shares: keep the already-measured
-    * statSafe frame when `measured` is at or under the session bound;
-    * past it, re-lay the frame out clustered by `key` off its
-    * materialized blocks (one shuffle, no recompute), materialize the
-    * copy, and free the original. Returns the frame to loop over, its
-    * free thunk, and whether the clustered regime is on (the caller
-    * keys its per-round barrier choice off it). `measured` should be
+    * statSafe frame when `measured` is in the small [[regime]]; past it,
+    * re-lay the frame out clustered by `key` off its materialized blocks
+    * (one shuffle, no recompute), materialize the copy, and release the
+    * original. Returns the frame to loop over and the regime (the caller
+    * keys its per-round barriers and hints off it). `measured` should be
     * the SLIM side's row count where the caller knows it (node count);
     * big-frame counts are an accepted proxy where it does not (SSSP
     * frontier, CC labels) — see [[ClusterLayoutMinRows]].
     */
-  def statSafeReclusterIfOver(frame0: DataFrame, free0: () => Unit,
-      measured: Long, key: String,
-      distinct: Boolean = false): (DataFrame, () => Unit, Boolean) = {
-    // bound == 0 FORCES the clustered regime (the documented conf
-    // contract plan-shape specs rely on), even for an empty frame
-    val bound = clusterMinRows(frame0.sparkSession)
-    if (bound > 0 && measured <= bound) (frame0, free0, false)
+  def statSafeReclusterIfOver(frame0: DataFrame, measured: Long, key: String,
+      distinct: Boolean = false): (DataFrame, Regime) = {
+    val r = regime(frame0.sparkSession, measured)
+    if (!r.clustered) (frame0, r)
     else {
-      val (c, f) = statSafeClusteredBy(frame0, key, distinct)
-      materialize(c) // then free the original
-      free0()
-      (c, f, true)
+      val c = statSafeClusteredBy(frame0, key, distinct)
+      materialize(c)
+      Checkpoints.release(frame0)
+      (c, r)
     }
   }
 
@@ -226,21 +231,6 @@ object CheckpointLayout {
   private[pipeline] def materialize(ck: DataFrame): Unit = {
     ck.queryExecution.toRdd.count(); ()
   }
-
-  /** Unpersist thunk over every LogicalRDD found in each held frame's
-    * plan. Same contract as `Barriers.freeThunk`: call only after every
-    * consumer is materialized; unexpected shapes leak rather than
-    * misfree. */
-  private def freeAll(held: Seq[DataFrame]): () => Unit =
-    () => held.foreach(f => freeThunk(f)())
-
-  private[graft] def freeThunk(ck: DataFrame): () => Unit =
-    () => try {
-      ck.queryExecution.analyzed.foreach {
-        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Stat-safe lazy barrier that KEEPS whatever partitioning/ordering the
     * frame already has — no repartition of its own. For frames whose
@@ -263,7 +253,7 @@ object CheckpointLayout {
     * that want AQE's runtime broadcast/skew decisions (checkpoint those
     * plainly first, then cluster off the leaf).
     */
-  def statSafeKeepingLayout(df: DataFrame): (DataFrame, () => Unit) = {
+  def statSafeKeepingLayout(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val names = df.columns.toSeq
     val tagged = df.select(names.map(n => col(n).as(tag(n))): _*)
@@ -271,7 +261,7 @@ object CheckpointLayout {
       val c = t.localCheckpoint(false); (c, Seq(c))
     }
     val out = ck.select(names.map(n => col(tag(n)).as(n)): _*)
-    (org.apache.spark.sql.graft.shims.dropOriginStats(out), freeThunk(ck))
+    Checkpoints.ownLeaves(org.apache.spark.sql.graft.shims.dropOriginStats(out), Seq(ck))
   }
 
   /** EAGER layout-keeping round barrier for the clustered regime of an
@@ -284,12 +274,11 @@ object CheckpointLayout {
     * inside the suspended-AQE window (planning only) and materialized by
     * an explicit count AFTER the conf is restored, so the round's job
     * never executes inside the window; eager-by-count so the PREVIOUS
-    * generation's blocks can be freed as soon as this returns. Returns
-    * the frame plus that unpersist thunk (no-op effect on reliable
-    * rounds — their data lives in files).
+    * generation can be released as soon as this returns (releasing a
+    * reliable round frees nothing — its data lives in files).
     */
   def roundBarrierKeepingLayout(df: DataFrame, round: Int,
-      checkpointDir: Option[String]): (DataFrame, () => Unit) = {
+      checkpointDir: Option[String]): DataFrame = {
     val spark = df.sparkSession
     val names = df.columns.toSeq
     val tagged = df.select(names.map(n => col(n).as(tag(n))): _*)
@@ -307,7 +296,7 @@ object CheckpointLayout {
       // RDD.doCheckpoint re-RUNS the checkpoint-marked RDD after the
       // materializing action to write its files — without a persist the
       // round's full lineage executes twice (the
-      // Barriers.roundBarrierCountingFreeable lesson). Cache the marked
+      // Barriers.roundBarrierCounting lesson). Cache the marked
       // RDD for the window between the two jobs, then drop the blocks:
       // reads afterwards come off the checkpoint files.
       val marked = ck.queryExecution.analyzed.collect {
@@ -318,22 +307,24 @@ object CheckpointLayout {
       marked.foreach(_.unpersist(blocking = false))
     } else materialize(ck)
     val out = ck.select(names.map(n => col(tag(n)).as(n)): _*)
-    (org.apache.spark.sql.graft.shims.dropOriginStats(out), freeThunk(ck))
+    Checkpoints.ownLeaves(org.apache.spark.sql.graft.shims.dropOriginStats(out), Seq(ck))
   }
 
   /** The double-materialization fallback shape, exposed for the spec: an
     * inner lazy checkpoint whose LogicalRDD leaf gives the outer
     * clustering shape a subtree with no aliases to collapse, so the
-    * capture is stable by construction. The PRODUCTION fallback path
-    * (inside [[clusteredBy]]) additionally keeps the inner frame in its
-    * free thunk — this spec-facing variant leaks the inner copy and must
-    * not be used outside tests. */
+    * capture is stable by construction. The open scope owns both
+    * checkpoints, as on the production fallback path inside
+    * [[clusteredBy]]. */
   private[pipeline] def stableBoundaryCheckpoint(df: DataFrame,
-      shape: DataFrame => DataFrame): DataFrame =
-    captureAqeOff(df.sparkSession, df) { d =>
-      val c = shape(d.localCheckpoint(false)).localCheckpoint(false)
-      (c, Seq(c))
-    }._1
+      shape: DataFrame => DataFrame): DataFrame = {
+    val (ck, held) = captureAqeOff(df.sparkSession, df) { d =>
+      val inner = d.localCheckpoint(false)
+      val outer = shape(inner).localCheckpoint(false)
+      (outer, Seq(outer, inner))
+    }
+    Checkpoints.ownLeaves(ck, held)
+  }
 
   /** The checkpoint's captured layout references its own output (and is
     * a real partitioning, not Unknown/single-partition degenerate).

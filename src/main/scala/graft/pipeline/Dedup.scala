@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.{Barriers, Checkpoints}
+
 /**
  * Deduplication operators for training-data pipelines: exact, MinHash+LSH,
  * SimHash, and n-gram Jaccard (engine extension beyond the reference).
@@ -102,27 +104,14 @@ object Dedup {
     * construction; a pathological hot bucket is truncated at
     * [[MaxLshBucket]] so it degrades recall instead of killing the job. */
   def lshCandidatePairs(df: DataFrame, id: Column, text: Column, k: Int = 8,
-      rowsPerBand: Int = 2, ngram: Int = 2, maxBucket: Int = MaxLshBucket): DataFrame =
-    lshCandidatePairsFreeable(df, id, text, k, rowsPerBand, ngram, maxBucket)._1
-
-  /** [[lshCandidatePairs]] plus the release thunk for the band checkpoint
-    * the capped path pins (no-op when uncapped). Same contract as
-    * `CheckpointLayout.freeThunk`: invoke only after every consumer of the
-    * returned frame has materialized — the blocks ARE the frame's lineage.
-    * The thunk-less overload above leaves the blocks pinned for the
-    * session (the bench/oracle harnesses drop them between queries via
-    * `Bench.dropLeakedBlocks`); library callers composing further work in
-    * one session should use this variant ([[nearDedupFreeable]] does). */
-  def lshCandidatePairsFreeable(df: DataFrame, id: Column, text: Column, k: Int = 8,
-      rowsPerBand: Int = 2, ngram: Int = 2,
-      maxBucket: Int = MaxLshBucket): (DataFrame, () => Unit) = {
+      rowsPerBand: Int = 2, ngram: Int = 2, maxBucket: Int = MaxLshBucket): DataFrame = {
     val bands0 = lshBands(minHashSignatures(df, id, text, k, ngram), k, rowsPerBand)
     // the star branch below reads the band frame a second time; checkpoint
     // the slim (id, band_idx, band_val) rows so the whole signature
     // pipeline does not re-run per consumer (uncapped callers — the p06
     // oracle contract — keep the single-pass plan, no checkpoint)
     val capped = maxBucket < Int.MaxValue
-    val bands = if (capped) bands0.localCheckpoint(false) else bands0
+    val bands = if (capped) Barriers.localCheckpoint(bands0) else bands0
     val pairwise = bands
       .groupBy(col("band_idx"), col("band_val"))
       // bounded min-k aggregate == slice(sort_array(collect_set), 1, cap)
@@ -139,7 +128,7 @@ object Dedup {
       .select(col("ids"), posexplode(col("ids")).as(Seq("__i", "id_a")))
       .select(col("id_a"),
         explode(slice(col("ids"), col("__i") + lit(2), size(col("ids")))).as("id_b"))
-    if (!capped) return (pairwise.distinct(), NoopFree)
+    if (!capped) return pairwise.distinct()
     // OVERFLOW STARS: truncation alone leaves every beyond-cap member of a
     // mega-dup bucket in NO candidate pair — a 10k-member duplicate group
     // would keep ~6k near-identical survivors (measured in r15, SURVEY §16).
@@ -165,17 +154,8 @@ object Dedup {
     val stars = bands.join(overflow, Seq("band_idx", "band_val"))
       .filter(col("__id") =!= col("__min"))
       .select(col("__min").as("id_a"), col("__id").as("id_b"))
-    (pairwise.unionByName(stars).distinct(), freeAll(Seq(bands)))
+    pairwise.unionByName(stars).distinct()
   }
-
-  /** no-op release thunk (uncapped paths create no checkpoint). */
-  private val NoopFree: () => Unit = () => ()
-
-  /** One thunk releasing the MEMORY_AND_DISK blocks behind a set of lazy
-    * localCheckpoints. Contract as `CheckpointLayout.freeThunk`: call only
-    * after every consumer of the frames built over them has materialized. */
-  private def freeAll(held: Seq[DataFrame]): () => Unit =
-    () => held.foreach(f => CheckpointLayout.freeThunk(f)())
 
   /** Exact n-gram Jaccard similarity over the whole input: distinct
     * character `n`-gram sets, every pair whose e4-quantized similarity
@@ -194,13 +174,7 @@ object Dedup {
     * the quantize boundary can never drop a pair the final filter — the
     * UNCHANGED float expression, hash-pinned by the p07 oracle — keeps. */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column, n: Int,
-      threshold: Double): DataFrame =
-    ngramJaccardPairsFreeable(df, id, text, n, threshold)._1
-
-  /** [[ngramJaccardPairs]] plus the release thunk for its four pinned
-    * staging checkpoints (grams / doc arrays / prefixes / intersections). */
-  def ngramJaccardPairsFreeable(df: DataFrame, id: Column, text: Column,
-      n: Int, threshold: Double): (DataFrame, () => Unit) = {
+      threshold: Double): DataFrame = {
     // the final filter keeps lattice value k/1e4 >= threshold, whose
     // smallest surviving k is >= round(threshold*1e4) (proof: if t*1e4
     // rounds up to k then t > (k-0.5)/1e4 > (k-1)/1e4, so k-1 cannot
@@ -219,10 +193,10 @@ object Dedup {
   }
 
   private def ngramJaccardPairsImpl(df: DataFrame, id: Column, text: Column,
-      n: Int, threshold: Double, tNum: Long, tDen: Long): (DataFrame, () => Unit) = {
+      n: Int, threshold: Double, tNum: Long, tDen: Long): DataFrame = {
     val grams = df.select(id.as("__id"),
       explode(graft.functions.sorted_distinct_ngram_hashes(lower(trim(text)), n)).as("__g"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val dfreq = grams.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
     // per-doc gram list rarest-first; one frame feeds the prefix explode
     // and both verify sides (barrier against re-derivation)
@@ -231,7 +205,7 @@ object Dedup {
       .agg(sort_array(collect_list(struct(col("__df"), col("__g")))).as("__a"))
       .select(col("__id"), transform(col("__a"), x => x.getField("__g")).as("__toks"),
         size(col("__a")).cast("long").as("__n"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val plen = (col("__n") - expr(s"(($tNum * __n + ${tDen - 1}) div $tDen)") + 1)
       .cast("int")
     // checkpointed: both aliased sides of the self-join read this frame,
@@ -239,7 +213,7 @@ object Dedup {
     // implementation measured on its gram table)
     val pref = docArr.select(col("__id"),
       explode(slice(col("__toks"), lit(1), plen)).as("__pt"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val cand = pref.select(col("__pt"), col("__id").as("id_a"))
       .join(pref.select(col("__pt"), col("__id").as("id_b")), Seq("__pt"))
       .filter(col("id_a") < col("id_b"))
@@ -252,15 +226,14 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("__ta"), col("__tb"))).cast("long").as("__inter"),
         col("__na"), col("__nb"))
-      .localCheckpoint(false) // barrier: keep the jaccard arithmetic out of pushdown
-    (inter
+      .transform(Barriers.localCheckpoint) // barrier: keep the jaccard arithmetic out of pushdown
+    inter
       .withColumn("jaccard", // floor-quantized: see TextOps.qualityScore note
         floor(col("__inter").cast("double") /
           (col("__na") + col("__nb") - col("__inter")).cast("double") * 10000.0 + 0.5)
           .cast("double") / 10000.0)
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard")),
-      freeAll(Seq(grams, docArr, pref, inter)))
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /**
@@ -284,17 +257,11 @@ object Dedup {
    * `(id_a, id_b, inter, uni, jac_e6)`, each qualifying pair once.
    */
   def prefixJaccardJoin(df: DataFrame, id: Column, text: Column, n: Int,
-      tNum: Int, tDen: Int): DataFrame =
-    prefixJaccardJoinFreeable(df, id, text, n, tNum, tDen)._1
-
-  /** [[prefixJaccardJoin]] plus the release thunk for its three pinned
-    * staging checkpoints (grams / doc arrays / prefixes). */
-  def prefixJaccardJoinFreeable(df: DataFrame, id: Column, text: Column, n: Int,
-      tNum: Int, tDen: Int): (DataFrame, () => Unit) = {
+      tNum: Int, tDen: Int): DataFrame = {
     require(tNum > 0 && tNum <= tDen, s"need 0 < tNum/tDen <= 1, got $tNum/$tDen")
     val grams = df.select(id.cast("long").as("__id"),
       explode(graft.functions.sorted_distinct_ngram_hashes(lower(trim(text)), n)).as("__g"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val dfreq = grams.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
     // per-doc gram list, rarest first; one frame feeds the prefix
     // explode and both verify sides (barrier against re-derivation)
@@ -303,19 +270,19 @@ object Dedup {
       .agg(sort_array(collect_list(struct(col("__df"), col("__g")))).as("__a"))
       .select(col("__id"), transform(col("__a"), x => x.getField("__g")).as("__toks"),
         size(col("__a")).cast("long").as("__sz"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val plen = (col("__sz") - expr(s"(($tNum * __sz + ${tDen - 1}) div $tDen)") + 1)
       .cast("int")
     // checkpointed: both aliased sides of the self-join read this frame
     // (aliased branches defeat exchange reuse)
     val pref = docArr.select(col("__id"),
       explode(slice(col("__toks"), lit(1), plen)).as("__pt"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val cand = pref.select(col("__pt"), col("__id").as("id_a"))
       .join(pref.select(col("__pt"), col("__id").as("id_b")), Seq("__pt"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    (cand
+    cand
       .join(docArr.select(col("__id").as("id_a"), col("__toks").as("__ta"),
         col("__sz").as("__sa")), "id_a")
       .join(docArr.select(col("__id").as("id_b"), col("__toks").as("__tb"),
@@ -324,8 +291,7 @@ object Dedup {
       .withColumn("uni", col("__sa") + col("__sb") - col("inter"))
       .filter(col("inter") * lit(tDen.toLong) >= col("uni") * lit(tNum.toLong))
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
-        expr("(inter * 1000000) div uni").as("jac_e6")),
-      freeAll(Seq(grams, docArr, pref)))
+        expr("(inter * 1000000) div uni").as("jac_e6"))
   }
 
   /** Verify candidate pairs by exact character-n-gram Jaccard, computing
@@ -334,15 +300,7 @@ object Dedup {
     * not the corpus). Output: (id_a, id_b, jaccard) for pairs at or above
     * `threshold`. */
   def ngramJaccardVerify(df: DataFrame, id: Column, text: Column, n: Int,
-      threshold: Double, pairs0: DataFrame): DataFrame =
-    ngramJaccardVerifyFreeable(df, id, text, n, threshold, pairs0)._1
-
-  /** [[ngramJaccardVerify]] plus the release thunk for its internal
-    * staging checkpoints (pairs/fingerprints/hash-join/intersections) —
-    * `CheckpointLayout.freeThunk` contract: call only after every consumer
-    * of the returned frame has materialized. */
-  def ngramJaccardVerifyFreeable(df: DataFrame, id: Column, text: Column, n: Int,
-      threshold: Double, pairs0: DataFrame): (DataFrame, () => Unit) = {
+      threshold: Double, pairs0: DataFrame): DataFrame = {
     // pairs feeds three consumers and grams three more; without a
     // materialization barrier Spark re-evaluates the full upstream pipeline
     // (the MinHash subtree for pairs, the md5 gram explode) once per
@@ -359,18 +317,18 @@ object Dedup {
     // `__gn > 0` preserves the NULL-drop semantics of 0/0 for texts
     // shorter than the gram size. Gram sets are then built ONLY for docs
     // appearing in some differing-text pair.
-    val pairs = pairs0.localCheckpoint(false)
+    val pairs = Barriers.localCheckpoint(pairs0)
     val candIds = pairs.select(col("id_a").as("__id"))
       .unionByName(pairs.select(col("id_b").as("__id"))).distinct()
     val textInfo = df.select(id.as("__id"), xxhash64(text).as("__th"),
       greatest(length(lower(trim(text))) - (n - 1), lit(0)).as("__gn"))
       .join(candIds, "__id")
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val pairsH = pairs
       .join(broadcast(textInfo.select(col("__id").as("id_a"), col("__th").as("__ta"),
         col("__gn").as("__gna"))), Seq("id_a"))
       .join(broadcast(textInfo.select(col("__id").as("id_b"), col("__th").as("__tb"))), Seq("id_b"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val identical = pairsH.filter(col("__ta") === col("__tb") && col("__gna") > 0)
       .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
       .filter(col("jaccard") >= threshold)
@@ -407,7 +365,7 @@ object Dedup {
       .join(broadcast(gramSets.select(col("__id").as("id_b"), col("__gs").as("__gb"),
         col("__n").as("__nb"))), Seq("id_b"))
       .select(col("id_a"), col("id_b"), interCol.as("__inter"), col("__na"), col("__nb"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val verified = inter
       .withColumn("jaccard",
         floor(col("__inter").cast("double") /
@@ -415,44 +373,28 @@ object Dedup {
           .cast("double") / 10000.0)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    (identical.unionByName(verified), freeAll(Seq(pairs, textInfo, pairsH, inter)))
+    identical.unionByName(verified)
   }
 
   /** End-to-end near-duplicate removal: LSH candidate generation, exact
     * Jaccard verification on candidates only, then drop the higher id of
-    * every verified pair (keep the canonical minimum representative). */
+    * every verified pair (keep the canonical minimum representative).
+    *
+    * The composition pins MEMORY_AND_DISK blocks (the corpus barrier, the
+    * capped band frame, the verify staging frames). A library caller
+    * composing downstream work in one long-lived session runs it inside
+    * a `graft.util.Checkpoints` scope — leaked generations squeeze later
+    * queries' execution memory (measured 10 s → 29 s at sf1.0) — and
+    * writes the survivors out before the scope exits. */
   def nearDedup(df: DataFrame, id: Column, text: Column, k: Int = 8,
       rowsPerBand: Int = 2, ngram: Int = 2, verifyN: Int = 8,
-      threshold: Double = 0.5, maxBucket: Int = MaxLshBucket): DataFrame =
-    nearDedupFreeable(df, id, text, k, rowsPerBand, ngram, verifyN, threshold,
-      maxBucket)._1
-
-  /** [[nearDedup]] plus one release thunk for EVERY lazy checkpoint the
-    * composition pins (the corpus barrier, the capped band frame, the
-    * verify staging frames). The thunk-less overload leaves those
-    * MEMORY_AND_DISK blocks pinned for the session — fine under the
-    * bench/verify harnesses, which drop leaked blocks between queries, but
-    * a library caller composing downstream work in one long-lived session
-    * (the 100 TB path: leaked generations squeeze later queries' execution
-    * memory, measured 10 s → 29 s at sf1.0) should use this variant and
-    * invoke the thunk once every consumer of the returned survivors frame
-    * has materialized. After the thunk runs the returned frame is DEAD
-    * (its lineage is truncated at the freed blocks) — write it out or
-    * re-checkpoint first. */
-  def nearDedupFreeable(df: DataFrame, id: Column, text: Column, k: Int = 8,
-      rowsPerBand: Int = 2, ngram: Int = 2, verifyN: Int = 8,
-      threshold: Double = 0.5,
-      maxBucket: Int = MaxLshBucket): (DataFrame, () => Unit) = {
+      threshold: Double = 0.5, maxBucket: Int = MaxLshBucket): DataFrame = {
     // four consumers read the corpus (signatures, fingerprints, gram sets,
     // the final anti-join); one materialization replaces four scans of the
     // upstream plan (source union/filters re-run per consumer otherwise)
-    val dfc = df.localCheckpoint(false)
-    val (pairs, freePairs) =
-      lshCandidatePairsFreeable(dfc, id, text, k, rowsPerBand, ngram, maxBucket)
-    val (verified, freeVerify) =
-      ngramJaccardVerifyFreeable(dfc, id, text, verifyN, threshold, pairs)
-    (dropVerified(dfc, id, verified),
-      () => { freePairs(); freeVerify(); freeAll(Seq(dfc))() })
+    val dfc = Barriers.localCheckpoint(df)
+    val pairs = lshCandidatePairs(dfc, id, text, k, rowsPerBand, ngram, maxBucket)
+    dropVerified(dfc, id, ngramJaccardVerify(dfc, id, text, verifyN, threshold, pairs))
   }
 
   /** floor-quantized 4-decimal cosine from pre-computed norms — the
@@ -475,13 +417,7 @@ object Dedup {
     * projection is checkpointed before the threshold filter so pushdown
     * cannot inline the 64-dim cosine into both predicate and projection. */
   def embeddingNearDupPairs(df: DataFrame, id: Column, vec: Column,
-      threshold: Double): DataFrame =
-    embeddingNearDupPairsFreeable(df, id, vec, threshold)._1
-
-  /** [[embeddingNearDupPairs]] plus the release thunk for the pinned sim
-    * barrier (`CheckpointLayout.freeThunk` contract). */
-  def embeddingNearDupPairsFreeable(df: DataFrame, id: Column, vec: Column,
-      threshold: Double): (DataFrame, () => Unit) = {
+      threshold: Double): DataFrame = {
     val a = df.select(id.as("id_a"), vec.cast("array<double>").as("__va"))
       .withColumn("__na", Similarity.l2Norm(col("__va")))
     val b = df.select(id.as("id_b"), vec.cast("array<double>").as("__vb"))
@@ -490,8 +426,8 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         quantizedCosine(col("__va"), col("__vb"), col("__na"), col("__nb")).as("sim"))
-      .localCheckpoint(false)
-    (sims.filter(col("sim") >= threshold), freeAll(Seq(sims)))
+      .transform(Barriers.localCheckpoint)
+    sims.filter(col("sim") >= threshold)
   }
 
   /** Embedding near-dedup, scale path: bucket by deterministic
@@ -501,15 +437,9 @@ object Dedup {
     * each verified pair. Candidate cost ~ corpus^2 / 2^bits; recall is
     * bounded by bucket collisions (spec-checked against brute force). */
   def embeddingNearDupLsh(df: DataFrame, id: Column, vec: Column,
-      dim: Int, bits: Int, threshold: Double): DataFrame =
-    embeddingNearDupLshFreeable(df, id, vec, dim, bits, threshold)._1
-
-  /** [[embeddingNearDupLsh]] plus the release thunk for its pinned
-    * checkpoints (bucket frame + sim barrier). */
-  def embeddingNearDupLshFreeable(df: DataFrame, id: Column, vec: Column,
-      dim: Int, bits: Int, threshold: Double): (DataFrame, () => Unit) = {
+      dim: Int, bits: Int, threshold: Double): DataFrame = {
     val bk = Similarity.hyperplaneBuckets(df.select(id.as("__id"), vec.as("__v")),
-      col("__id"), col("__v"), dim, bits).localCheckpoint(false)
+      col("__id"), col("__v"), dim, bits).transform(Barriers.localCheckpoint)
     val a = bk.select(col("bucket"), col("vec_id").as("id_a"),
       col("embedding").cast("array<double>").as("__va"))
       .withColumn("__na", Similarity.l2Norm(col("__va")))
@@ -520,9 +450,9 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         quantizedCosine(col("__va"), col("__vb"), col("__na"), col("__nb")).as("sim"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val verified = sims.filter(col("sim") >= threshold)
-    (dropVerified(df, id, verified), freeAll(Seq(bk, sims)))
+    dropVerified(df, id, verified)
   }
 
   /** SemDeDup-style SEMANTIC dedup (the Abbas et al. 2023 shape,
@@ -560,21 +490,13 @@ object Dedup {
     * hot-bucket cap. */
   def semanticDedup(df: DataFrame, id: Column, vec: Column, m: Int,
       iters: Int, threshold: Double, dim: Int = 0, refineBits: Int = 0,
-      refineMinSize: Long = Long.MaxValue): DataFrame =
-    semanticDedupFreeable(df, id, vec, m, iters, threshold, dim, refineBits,
-      refineMinSize)._1
-
-  /** [[semanticDedup]] plus the release thunk for its pinned checkpoints
-    * (cluster assignment + sim barrier). */
-  def semanticDedupFreeable(df: DataFrame, id: Column, vec: Column, m: Int,
-      iters: Int, threshold: Double, dim: Int = 0, refineBits: Int = 0,
-      refineMinSize: Long = Long.MaxValue): (DataFrame, () => Unit) = {
+      refineMinSize: Long = Long.MaxValue): DataFrame = {
     require(refineBits == 0 || dim > 0, "refineBits needs the vector dim")
-    val (cents, freeCents) = Similarity.kMeansCentroidsFreeable(df, id, vec, m, iters)
+    val cents = Similarity.kMeansCentroids(df, id, vec, m, iters)
     val assigned0 = Similarity.ivfAssign(
         df.select(id.as("vec_id"), vec.cast("array<double>").as("embedding")),
         col("vec_id"), col("embedding"), cents, nprobe = 1)
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val assigned =
       if (refineBits == 0) assigned0.withColumn("__bkt", lit(0L))
       else {
@@ -596,12 +518,11 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_b"),
         quantizedCosine(col("__va"), col("__vb"), col("__na"), col("__nb")).as("sim"))
-      .localCheckpoint(false)
+      .transform(Barriers.localCheckpoint)
     val verified = sims.filter(col("sim") >= threshold)
-    (assigned.join(verified.select(col("id_b").as("__drop")).distinct(),
+    assigned.join(verified.select(col("id_b").as("__drop")).distinct(),
         col("vec_id") === col("__drop"), "left_anti")
-      .select(col("vec_id"), col("centroid_id").cast("long").as("centroid_id")),
-      () => { freeCents(); freeAll(Seq(assigned0, sims))() })
+      .select(col("vec_id"), col("centroid_id").cast("long").as("centroid_id"))
   }
 
   /** Connected components over an undirected pair table: one row per
@@ -657,7 +578,7 @@ object Dedup {
     // at the 30× probe, and an OOM at 100 TB. With the estimate reset,
     // AQE still broadcasts the genuinely-small side (labels) from exact
     // runtime sizes.
-    val (edges0, freeEdges0) = graft.util.Barriers.statSafeFreeable(
+    val edges0 = Barriers.statSafe(
       pairs.select(col("id_a").as("__src"), col("id_b").as("__dst"))
         .unionByName(pairs.select(col("id_b").as("__src"), col("id_a").as("__dst")))
         // a NULL endpoint is not an edge: without this the driver
@@ -675,7 +596,8 @@ object Dedup {
       // driverComponents collects the edges into a local result frame —
       // nothing downstream reads the checkpoint blocks
       val out = driverComponents(edges0, idType)
-      freeEdges0()
+      Checkpoints.release(edges0)
+      Checkpoints.noteLoop("connectedComponents", "driver", 0)
       return out
     }
     // Distributed regime. Past ClusterLayoutMinRows the edge frame is
@@ -692,18 +614,18 @@ object Dedup {
     // cheap here (one count over the already-materialized edge blocks)
     // and doubles as labels0's materialization, which round 1 would
     // otherwise pay.
-    val (labels0, freeLabels0) = graft.util.Barriers.statSafeFreeable(
+    val labels0 = Barriers.statSafe(
       edges0.select(col("__src").as("id")).distinct()
         .withColumn("component", col("id")))
     val nodeCount = labels0.count()
-    val (edges, freeEdges, _) = CheckpointLayout.statSafeReclusterIfOver(
-      edges0, freeEdges0, measured = nodeCount, key = "__src")
+    val (edges, regime) = CheckpointLayout.statSafeReclusterIfOver(
+      edges0, measured = nodeCount, key = "__src")
     var labels = labels0
-    // frees the superseded label generation once the round's action has
-    // materialized its successor — blocks held at any moment: the current
-    // generation, not one per round (the final generation is never freed;
+    // the superseded label generation is released once the round's action
+    // has materialized its successor — blocks held at any moment: the
+    // current generation, not one per round (the final generation stays;
     // the caller's result reads it)
-    var freeLabels: () => Unit = freeLabels0
+    var labelsGen = labels0
     val labelType = labels.schema("component").dataType
     var changed = 1L
     var round = 0
@@ -727,7 +649,7 @@ object Dedup {
       // self-join — with the union+aggregate on both join sides it would
       // evaluate twice per round (and feed Catalyst's size-only stats a
       // join of two unknown-size subtrees)
-      val (relaxed, freeRelaxed) = graft.util.Barriers.statSafeFreeable(
+      val relaxed = Barriers.statSafe(
         labels.select(col("id"), col("component"), col("component").as("__prev"))
           .unionByName(msgs)
           .groupBy(col("id")).agg(min(col("component")).as("component"),
@@ -738,7 +660,7 @@ object Dedup {
       // Change detection rides the SAME job that materializes the round
       // barrier (accumulator over the row stream): exactly one action per
       // round — on slim label frames the loop cost IS job count.
-      val (next, nChanged, freeNext) = graft.util.Barriers.roundBarrierCountingFreeable(
+      val (next, nChanged) = Barriers.roundBarrierCounting(
         relaxed.join(
             relaxed.select(col("id").as("__rid"), col("component").as("__rcomp")),
             relaxed("component") === col("__rid"), "left")
@@ -749,8 +671,8 @@ object Dedup {
       changed = nChanged
       // next is materialized: the round's intermediates and the previous
       // label generation are dead
-      freeRelaxed(); freeLabels()
-      freeLabels = freeNext
+      Seq(relaxed, labelsGen).foreach(Checkpoints.release)
+      labelsGen = next
       labels = next.select(col("id"), col("component"))
       round += 1
     }
@@ -763,7 +685,8 @@ object Dedup {
     // with maxRounds <= 0 the loop body never ran, labels is still the
     // lazy labels0 whose lineage READS the edges checkpoint, and freeing
     // it here would hand the caller a frame over unpersisted blocks.
-    if (round > 0) freeEdges()
+    if (round > 0) Checkpoints.release(edges)
+    Checkpoints.noteLoop("connectedComponents", regime.name, round)
     labels
   }
 
@@ -914,28 +837,20 @@ object Dedup {
     * the operator keeps a full-value oracle. */
   def incrementalDedup(newDf: DataFrame, refDf: DataFrame, newKey: Column,
       refKey: Column, expectedRefItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame =
-    incrementalDedupFreeable(newDf, refDf, newKey, refKey, expectedRefItems,
-      fpp)._1
-
-  /** [[incrementalDedup]] plus the release thunk for the pinned
-    * bloom-probe barrier (`CheckpointLayout.freeThunk` contract). */
-  def incrementalDedupFreeable(newDf: DataFrame, refDf: DataFrame, newKey: Column,
-      refKey: Column, expectedRefItems: Long = 1000000L,
-      fpp: Double = 0.01): (DataFrame, () => Unit) = {
+      fpp: Double = 0.01): DataFrame = {
     val refKeys = refDf.select(refKey.as("__rk"))
     val bf = keyBloom(refKeys, col("__rk"), expectedRefItems, fpp)
     // codegen'd probe (BloomFilterMightContain via the shim) — the former
     // Scala UDF split the whole-stage span around every bloom-gated filter
     val keyed = newDf.withColumn("__maybe",
         org.apache.spark.sql.graft.shims.bloomMightContain(bf, xxhash64(newKey)))
-      .localCheckpoint(false) // evaluate the bloom probe once per row
+      .transform(Barriers.localCheckpoint) // evaluate the bloom probe once per row
     val definite = keyed.filter(!col("__maybe"))
     // exact verification joins on the FULL key (hashes only gate the
     // bloom): a 2^-64 hash collision must not drop a genuinely new row
     val survivors = keyed.filter(col("__maybe"))
       .join(refKeys.distinct(), newKey === col("__rk"), "left_anti")
-    (definite.unionByName(survivors).drop("__maybe"), freeAll(Seq(keyed)))
+    definite.unionByName(survivors).drop("__maybe")
   }
 
   /** SimHash width: all 60 bits of the portable md5-derived token hash
@@ -1034,17 +949,8 @@ object Dedup {
   def incrementalNearDedup(newDf: DataFrame, refDf: DataFrame,
       newId: Column, newText: Column, refId: Column, refText: Column,
       k: Int = 8, rowsPerBand: Int = 2, ngram: Int = 2, verifyN: Int = 8,
-      threshold: Double = 0.5): DataFrame =
-    incrementalNearDedupFreeable(newDf, refDf, newId, newText, refId, refText,
-      k, rowsPerBand, ngram, verifyN, threshold)._1
-
-  /** [[incrementalNearDedup]] plus the release thunk for its pinned
-    * checkpoints (new-batch barrier + the verify staging frames). */
-  def incrementalNearDedupFreeable(newDf: DataFrame, refDf: DataFrame,
-      newId: Column, newText: Column, refId: Column, refText: Column,
-      k: Int = 8, rowsPerBand: Int = 2, ngram: Int = 2, verifyN: Int = 8,
-      threshold: Double = 0.5): (DataFrame, () => Unit) = {
-    val newC = newDf.select(newId.as("__id"), newText.as("__text")).localCheckpoint(false)
+      threshold: Double = 0.5): DataFrame = {
+    val newC = Barriers.localCheckpoint(newDf.select(newId.as("__id"), newText.as("__text")))
     val refC = refDf.select(refId.as("__id"), refText.as("__text"))
     val newBands = lshBands(minHashSignatures(newC, col("__id"), col("__text"), k, ngram),
       k, rowsPerBand)
@@ -1057,11 +963,10 @@ object Dedup {
       .select(col("__id").as("id_a"), col("__nid").as("id_b"))
       .distinct()
     val union = newC.unionByName(refC)
-    val (verified, freeVerify) = ngramJaccardVerifyFreeable(union, col("__id"),
+    val verified = ngramJaccardVerify(union, col("__id"),
       col("__text"), verifyN, threshold, pairs)
-    (newDf.join(verified.select(col("id_b").as("__dup")).distinct(),
-      newId === col("__dup"), "left_anti"),
-      () => { freeVerify(); freeAll(Seq(newC))() })
+    newDf.join(verified.select(col("id_b").as("__dup")).distinct(),
+      newId === col("__dup"), "left_anti")
   }
 
   /** Benchmark decontamination: flag corpus documents that share any word
@@ -1170,13 +1075,6 @@ object Dedup {
   def simHashNearDupPairs(df: DataFrame, id: Column, text: Column,
       maxHamming: Int = 3, maxBand: Int = MaxSimHashBand): DataFrame =
     bandedHammingPairs(simHash(df, id, text), col("__id"), col("simhash"),
-      SimHashBits, maxHamming, maxBand)
-
-  /** [[simHashNearDupPairs]] with the release thunk for its pinned
-    * checkpoints (the [[bandedHammingPairsFreeable]] contract). */
-  def simHashNearDupPairsFreeable(df: DataFrame, id: Column, text: Column,
-      maxHamming: Int = 3, maxBand: Int = MaxSimHashBand): (DataFrame, () => Unit) =
-    bandedHammingPairsFreeable(simHash(df, id, text), col("__id"), col("simhash"),
       SimHashBits, maxHamming, maxBand)
 
   /** Incremental PERCEPTUAL dedup of a hashed batch against a reference
@@ -1342,23 +1240,14 @@ object Dedup {
     * going quadratic. The verify is a codegen'd xor/bit_count. Shared by
     * the text (SimHash, 60-bit) and image (pHash, 63-bit) near-dup paths. */
   def bandedHammingPairs(hashed: DataFrame, id: Column, hash: Column,
-      bits: Int, maxHamming: Int, maxBand: Int = MaxSimHashBand): DataFrame =
-    bandedHammingPairsFreeable(hashed, id, hash, bits, maxHamming, maxBand)._1
-
-  /** [[bandedHammingPairs]] plus the release thunk for the checkpoints the
-    * capped path pins (hash projection + band frame) —
-    * `CheckpointLayout.freeThunk` contract: invoke only after every
-    * consumer of the returned frame has materialized. */
-  def bandedHammingPairsFreeable(hashed: DataFrame, id: Column, hash: Column,
-      bits: Int, maxHamming: Int,
-      maxBand: Int = MaxSimHashBand): (DataFrame, () => Unit) = {
+      bits: Int, maxHamming: Int, maxBand: Int = MaxSimHashBand): DataFrame = {
     val nBands = maxHamming + 1
     // every band must carry >= 1 bit or the pigeonhole structure silently
     // degenerates (a 0-bit band matches EVERY pair)
     require(nBands <= bits,
       s"maxHamming=$maxHamming needs $nBands pigeonhole bands but the hash has only $bits bits")
     val sh = hashed.select(id.as("__id"), hash.as("__h"))
-      .filter(col("__h").isNotNull).localCheckpoint(false)
+      .filter(col("__h").isNotNull).transform(Barriers.localCheckpoint)
     val bandCols = bandBounds(bits, nBands).map { case (lo, width) =>
       shiftright(col("__h"), lo).bitwiseAND((1L << width) - 1)
     }
@@ -1369,7 +1258,7 @@ object Dedup {
     // star branch re-reads the band frame — checkpoint the slim rows
     // (see lshCandidatePairs; the uncapped path keeps the single pass)
     val capped = maxBand < Int.MaxValue
-    val bands = if (capped) bands0.localCheckpoint(false) else bands0
+    val bands = if (capped) Barriers.localCheckpoint(bands0) else bands0
     val pairwise = bands
       .groupBy(col("band_idx"), col("band_val"))
       // bounded min-k aggregate == slice(sort_array(collect_set), 1, cap)
@@ -1385,7 +1274,7 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         hammingDistance(col("a.h"), col("b.h")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    if (!capped) return (pairwise.distinct(), freeAll(Seq(sh)))
+    if (!capped) return pairwise.distinct()
     // overflow stars (the MaxLshBucket contract): beyond-cap members of a
     // mega-band each get a LINEAR candidate against the band's minimum-id
     // member, hamming-filtered like any pair — an all-identical-pHash
@@ -1400,6 +1289,6 @@ object Dedup {
       .select(col("__min.id").as("id_a"), col("m.id").as("id_b"),
         hammingDistance(col("__min.h"), col("m.h")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    (pairwise.unionByName(stars).distinct(), freeAll(Seq(sh, bands)))
+    pairwise.unionByName(stars).distinct()
   }
 }

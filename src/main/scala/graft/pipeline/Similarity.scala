@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Barriers
+
 /**
  * Embedding similarity search (engine extension beyond the reference).
  *
@@ -134,24 +136,16 @@ object Similarity {
     * (Σint / n) / 1e4 — so every engine reproduces the centroids
     * bit-for-bit, and the (unquantized) cosine argmax of the next round
     * compares identical doubles. Empty clusters keep their previous
-    * centroid. */
+    * centroid.
+    *
+    * The corpus barrier and every centroid generation form one LAZY
+    * lineage chain, so none is released before the open
+    * `graft.util.Checkpoints` scope exits. */
   def kMeansCentroids(corpus: DataFrame, id: Column, vec: Column, m: Int,
-      iters: Int): DataFrame =
-    kMeansCentroidsFreeable(corpus, id, vec, m, iters)._1
-
-  /** [[kMeansCentroids]] plus one release thunk for every checkpoint the
-    * loop pins (the corpus barrier and each centroid generation — the
-    * generations form a LAZY lineage chain, so none can be freed until a
-    * consumer of the returned frame has materialized; after the thunk
-    * runs the returned frame is dead). */
-  def kMeansCentroidsFreeable(corpus: DataFrame, id: Column, vec: Column, m: Int,
-      iters: Int): (DataFrame, () => Unit) = {
-    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var cents = ivfCentroids(corpus, id, vec, m).localCheckpoint(false)
-    held += cents
-    val base = corpus.select(id.as("vec_id"), vec.cast("array<double>").as("embedding"))
-      .localCheckpoint(false)
-    held += base
+      iters: Int): DataFrame = {
+    var cents = Barriers.localCheckpoint(ivfCentroids(corpus, id, vec, m))
+    val base = Barriers.localCheckpoint(
+      corpus.select(id.as("vec_id"), vec.cast("array<double>").as("embedding")))
     for (_ <- 1 to iters) {
       val assigned = ivfAssign(base, col("vec_id"), col("embedding"), cents, nprobe = 1)
       val means = assigned
@@ -167,12 +161,9 @@ object Similarity {
       cents = cents.select(col("centroid_id"), col("centroid").as("__prev"))
         .join(means, Seq("centroid_id"), "left")
         .select(col("centroid_id"), coalesce(col("__new"), col("__prev")).as("centroid"))
-        .localCheckpoint(false)
-      held += cents
+        .transform(Barriers.localCheckpoint)
     }
-    val frames = held.toList
-    (cents, () => frames.foreach(f =>
-      graft.pipeline.CheckpointLayout.freeThunk(f)()))
+    cents
   }
 
   /** IVF inverted-list assignment: each vector joins its `nprobe` nearest

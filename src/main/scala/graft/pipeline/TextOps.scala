@@ -868,7 +868,7 @@ object TextOps {
       .select(col("doc_id"), col("y"),
         (md5Long(col("f")) % lit(buckets)).as("b"))
       .groupBy(col("doc_id"), col("y"), col("b")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .transform(graft.util.Barriers.localCheckpoint)
     // this count doubles as collapsed's materialization (first iteration
     // would otherwise pay it)
     val nDocs = collapsed.select(col("doc_id")).distinct().count()
@@ -878,17 +878,14 @@ object TextOps {
     // shuffle is cheap — clustering would only add a build shuffle and
     // cost the iterations their adaptive plans (measured +40-70% when
     // clustered too early). Past it, bake the layout in once.
-    val clusterBound = CheckpointLayout.clusterMinRows(spark)
     val feats =
-      if (clusterBound > 0 && nDocs <= clusterBound) collapsed
+      if (!CheckpointLayout.regime(spark, nDocs).clustered) collapsed
       else {
-        val (f, featsHeld) = CheckpointLayout.clusteredByHeld(collapsed, key = "doc_id")
+        val f = CheckpointLayout.clusteredBy(collapsed, key = "doc_id")
         CheckpointLayout.materialize(f)
-        // f materialized: the plain inner checkpoint and any fallback
-        // boundary (featsHeld tail) are dead; f itself (featsHeld head)
+        // f materialized: the plain inner checkpoint is dead; f itself
         // lives in the returned result's lineage
-        CheckpointLayout.freeThunk(collapsed)()
-        featsHeld.drop(1).foreach(h => CheckpointLayout.freeThunk(h)())
+        graft.util.Checkpoints.release(collapsed)
         f
       }
 

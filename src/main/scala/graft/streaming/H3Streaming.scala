@@ -1112,14 +1112,13 @@ object H3Streaming {
       initialGraph: Option[DataFrame] = None):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.graph.Triangles
-    import graft.util.Barriers
+    import graft.util.{Barriers, Checkpoints}
     import org.apache.spark.sql.expressions.Window
     // accumulated canonical edges (u, v); bootstrap from the sink's
     // stored output on restart (canonicalized + distinct — tolerates a
     // sink that stored at-least-once duplicates or (src, dst) order)
     var graph: DataFrame = initialGraph
       .map(g => Triangles.canonicalEdges(g, col("u"), col("v"))).orNull
-    var freeGraph: () => Unit = () => ()
     // whether `graph` is a materialized generation (vs the caller's lazy
     // bootstrap plan). The bootstrap MUST be snapshotted before the first
     // batch touches it: it is otherwise re-evaluated three times in epoch 0
@@ -1132,12 +1131,11 @@ object H3Streaming {
     var graphMaterialized = false
     stream.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
       if (graph != null && !graphMaterialized) {
-        val (g0, freeG0) = Barriers.generation(graph)
-        graph = g0; freeGraph = freeG0
+        graph = Barriers.generation(graph)
       }
       graphMaterialized = true
       val cand = Triangles.canonicalEdges(batch, col(srcCol), col(dstCol))
-      val (fresh, freeFresh) = Barriers.generation(
+      val fresh = Barriers.generation(
         (if (graph == null) cand
          else cand.join(graph, Seq("u", "v"), "left_anti"))
           .withColumn("erank",
@@ -1146,7 +1144,7 @@ object H3Streaming {
       def bothDir(df: DataFrame, rank: Column) =
         df.select(col("u").as("a"), col("v").as("b"), rank.as("r"))
           .unionAll(df.select(col("v").as("a"), col("u").as("b"), rank.as("r")))
-      val (adj, freeAdj) = Barriers.generation(
+      val adj = Barriers.generation(
         if (graph == null) bothDir(fresh, col("erank"))
         else bothDir(graph, lit(Inf)).unionAll(bothDir(fresh, col("erank"))))
       val closed = fresh
@@ -1160,14 +1158,13 @@ object H3Streaming {
         .join(closed, Seq("u", "v"), "left")
         .select(col("u"), col("v"), coalesce(col("n_closed"), lit(0L)).as("n_closed"))
       sink(out, epoch)
-      val (nextGraph, freeNext) = Barriers.generation(
+      val nextGraph = Barriers.generation(
         if (graph == null) fresh.select(col("u"), col("v"))
         else graph.unionAll(fresh.select(col("u"), col("v"))))
       // the new generation is materialized (eager) — every superseded
-      // block set of this epoch can be freed now
-      freeGraph(); freeFresh(); freeAdj()
+      // block set of this epoch can be released now
+      (Option(graph).toSeq :+ fresh :+ adj).foreach(Checkpoints.release)
       graph = nextGraph
-      freeGraph = freeNext
     }
       .outputMode("append")
   }

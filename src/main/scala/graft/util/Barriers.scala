@@ -44,9 +44,8 @@ object Barriers {
     if (!matches) sc.setCheckpointDir(dir)
   }
 
-  /** Cut lineage for `df` at iteration `round` (0-based). An existing
-    * session checkpoint dir is respected; otherwise `checkpointDir` is
-    * installed on first reliable use.
+  /** The re-wrapped frame over checkpoint `cp`, owned by the open
+    * [[Checkpoints]] scope.
     *
     * The checkpointed frame is re-wrapped from its RDD to RESET plan
     * statistics: `Dataset.checkpoint`/`localCheckpoint` rewrite the
@@ -60,40 +59,21 @@ object Barriers {
     * `spark.sql.defaultSizeInBytes`, bounding planning cost for any
     * number of rounds; the blocks behind the RDD are untouched, and
     * these slim per-round label frames never want stats-driven broadcast
-    * decisions anyway. */
-  /** Unpersist thunk for a checkpointed frame: the persisted RDD is the
-    * one inside the checkpoint's LogicalRDD leaf — unpersisting a derived
-    * wrapper's .rdd would drop a wrapper and leak the actual blocks; an
-    * unexpected plan shape leaks rather than misfrees. */
-  private def freeThunk(cp: DataFrame): () => Unit =
-    () => try cp.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    } catch { case scala.util.control.NonFatal(_) => () } // leak, don't fail
+    * decisions anyway.
+    *
+    * A loop that supersedes a full-size frame every round (SSSP
+    * best-cost table) hands the previous generation to
+    * [[Checkpoints.release]] once the next one has materialized. */
+  private def rewrap(cp: DataFrame): DataFrame =
+    Checkpoints.ownLeaves(cp.sparkSession.createDataFrame(cp.rdd, cp.schema), Seq(cp))
 
-  def roundBarrier(df: DataFrame, round: Int, checkpointDir: Option[String],
-      eager: Boolean): DataFrame =
-    roundBarrierFreeable(df, round, checkpointDir, eager)._1
-
-  /** [[roundBarrier]] that ALSO returns a thunk unpersisting the
-    * generation's checkpoint blocks — for loops that supersede a full-size
-    * frame every round (SSSP best-cost table): without freeing, every
-    * round's localCheckpoint generation stays pinned in the block manager
-    * for the session. Call the thunk only after every consumer of the
-    * frame has been materialized (the truncated lineage cannot recompute
-    * freed blocks). Reliable-checkpoint rounds return an effective no-op
-    * (their data lives in files, not blocks). */
-  def roundBarrierFreeable(df: DataFrame, round: Int, checkpointDir: Option[String],
-      eager: Boolean): (DataFrame, () => Unit) = {
-    val cp = checkpointDir match {
-      case Some(dir) if round % ReliableEvery == ReliableEvery - 1 =>
-        ensureCheckpointDir(df.sparkSession.sparkContext, dir)
-        df.checkpoint(eager)
-      case _ => df.localCheckpoint(eager)
-    }
-    val out = cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    (out, freeThunk(cp))
+  /** Lazy `localCheckpoint` that KEEPS the origin plan's statistics, owned
+    * by the open [[Checkpoints]] scope: the staging barrier for a small
+    * intermediate that feeds several consumers (each would otherwise
+    * re-run its whole subtree). */
+  def localCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = false)
+    Checkpoints.ownLeaves(cp, Seq(cp))
   }
 
   /** Stat-safe lazy barrier: `localCheckpoint(eager = false)` + re-wrap
@@ -109,37 +89,24 @@ object Barriers {
     * so only AQE's RUNTIME sizes — which are exact — can still choose a
     * broadcast. Use for any frame whose size estimate is untrustworthy
     * and that feeds a join. */
-  def statSafe(df: DataFrame): DataFrame = statSafeFreeable(df)._1
+  def statSafe(df: DataFrame): DataFrame = rewrap(df.localCheckpoint(eager = false))
 
-  /** [[statSafe]] that also returns an unpersist thunk, for intra-round
-    * intermediates that are dead once the round's action has run — same
-    * call-after-every-consumer-materialized contract as
-    * [[roundBarrierFreeable]]. */
-  def statSafeFreeable(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint(eager = false)
-    val out = cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    (out, freeThunk(cp))
-  }
+  /** EAGER [[statSafe]]: the blocks exist before this returns, so the
+    * PREVIOUS generation can be released immediately after. For
+    * foreachBatch loops that supersede a cumulative frame every epoch
+    * (streaming triangle counting's accumulated graph) — without
+    * releasing, every epoch's blocks survive for the stream's lifetime. */
+  def generation(df: DataFrame): DataFrame = rewrap(df.localCheckpoint(eager = true))
 
-  /** EAGER [[statSafe]] whose blocks can be FREED: returns the re-wrapped
-    * frame plus a thunk that unpersists the generation's checkpoint
-    * blocks. For foreachBatch loops that supersede a cumulative frame
-    * every epoch (streaming triangle counting's accumulated graph) —
-    * without freeing, every epoch's localCheckpoint blocks survive for
-    * the stream's lifetime. Eager: the blocks exist before this returns,
-    * so the PREVIOUS generation can be freed immediately after. Call the
-    * thunk only once every consumer of the frame has been materialized —
-    * the lineage behind the blocks is truncated, so a recompute after
-    * unpersist fails loudly rather than silently rescanning. */
-  def generation(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint(eager = true)
-    val out = cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    (out, freeThunk(cp))
-  }
-
-  /** [[roundBarrier]] that ALSO counts rows matching `changed` — in the
-    * SAME job that materializes the checkpoint, via an accumulator
-    * threaded through the row stream. An iterative loop's convergence
+  /** Cut lineage for `df` at iteration `round` (0-based), eagerly, and
+    * count the rows matching `changed`. Every [[ReliableEvery]]-th round
+    * writes a reliable checkpoint when `checkpointDir` is set (an existing
+    * session checkpoint dir is respected; otherwise `checkpointDir` is
+    * installed on first reliable use); other rounds use `localCheckpoint`,
+    * owned by the open [[Checkpoints]] scope.
+    *
+    * The count rides the SAME job that materializes the checkpoint, via
+    * an accumulator threaded through the row stream. A loop's convergence
     * check then costs zero extra actions per round (previously: one
     * materializing action + one count action; the count scan is cheap
     * but on slim label frames per-round job overhead IS the loop cost —
@@ -154,16 +121,6 @@ object Barriers {
     * the action); intermediate rounds are exactly one job. */
   def roundBarrierCounting(df: DataFrame, round: Int,
       checkpointDir: Option[String])(changed: Row => Boolean): (DataFrame, Long) = {
-    val (out, n, _) = roundBarrierCountingFreeable(df, round, checkpointDir)(changed)
-    (out, n)
-  }
-
-  /** [[roundBarrierCounting]] that also returns the generation's unpersist
-    * thunk (same supersession contract as [[roundBarrierFreeable]]);
-    * reliable-checkpoint rounds already read off files, so their thunk is
-    * a no-op. */
-  def roundBarrierCountingFreeable(df: DataFrame, round: Int,
-      checkpointDir: Option[String])(changed: Row => Boolean): (DataFrame, Long, () => Unit) = {
     val spark = df.sparkSession
     val acc = spark.sparkContext.longAccumulator(s"graft.changed.r$round")
     val marked = df.rdd.map { r => if (changed(r)) acc.add(1L); r }
@@ -176,12 +133,11 @@ object Barriers {
         marked.checkpoint()
         marked.count()
         marked.unpersist(blocking = false) // reads now come off checkpoint files
-        (spark.createDataFrame(marked, df.schema), acc.value, () => ())
+        (spark.createDataFrame(marked, df.schema), acc.value)
       case _ =>
         marked.localCheckpoint()
         marked.count()
-        (spark.createDataFrame(marked, df.schema), acc.value,
-          () => { marked.unpersist(blocking = false); () })
+        (Checkpoints.own(spark.createDataFrame(marked, df.schema), Seq(marked)), acc.value)
     }
   }
 }

@@ -58,7 +58,10 @@ class QueryProfileSpec extends AnyFunSuite {
       "b_build_fails" -> ((_, _) => throw new IllegalStateException("deliberate build failure")),
       "c_task_fails" -> ((s, _) => s.range(10).toDF()
         .filter(expr("raise_error('deliberate task failure') IS NULL"))),
-      "d_ok" -> ((s, _) => s.range(100).toDF()))
+      "d_ok" -> ((s, _) => s.range(100).toDF()),
+      "e_loop" -> ((s, _) => graft.graph.Ranks.pageRank(
+        s.range(0, 40).select(col("id").as("s"), (col("id") * 7 % 40).as("d")),
+        col("s"), col("d"), iters = 3)))
     val run = Bench.measure(spark, Bench.Settings(dir.toString, dir.resolve("bench.json").toString,
       warm = false, probeConf = "spark.sql.adaptive.enabled=false"), queries)
     val art = new ObjectMapper().readTree(Bench.artifacts(run, Nil)._1)
@@ -73,7 +76,8 @@ class QueryProfileSpec extends AnyFunSuite {
     assert(art.get("failed_count").asInt == 2)
     val fields = Seq("wall_ms", "build_ms", "rows", "analysis_ms", "optimization_ms", "planning_ms",
       "jobs", "stages", "tasks", "task_run_ms", "sched_delay_ms", "deser_ms", "gc_ms",
-      "driver_gap_ms", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "top_jobs")
+      "driver_gap_ms", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "top_jobs",
+      "loops")
     for (col <- Seq("", "_b"); q <- queries.map(_._1)) {
       val p = art.get("profile" + col).get(q)
       assert(fields.forall(p.has), s"profile$col.$q lacks a field: $p")
@@ -81,6 +85,10 @@ class QueryProfileSpec extends AnyFunSuite {
       assert(art.get("queries" + col).get(q).asDouble > 0)
     }
     assert(art.get("profile").get("a_ok").get("rows").asLong == 3)
+    assert(art.get("profile").get("a_ok").get("loops").size == 0)
+    val loop = art.get("profile").get("e_loop").get("loops")
+    assert(loop.size == 1 && loop.get(0).get("op").asText == "pageRank" &&
+      loop.get(0).get("regime").asText == "small" && loop.get(0).get("rounds").asInt == 3, loop)
     assert(art.get("profile").get("b_build_fails").get("error").get("message").asText ==
       "deliberate build failure")
     assert(art.get("probe_conf").get("spark.sql.adaptive.enabled").asText == "false")

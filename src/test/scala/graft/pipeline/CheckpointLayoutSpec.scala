@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expr.SparkTestSession
+import graft.util.Checkpoints
 
 /** [[CheckpointLayout.clusteredBy]] must yield a checkpoint whose
   * captured HashPartitioning+ordering reference its OWN output on both
@@ -86,36 +87,37 @@ class CheckpointLayoutSpec extends AnyFunSuite {
     // non-broadcast regime (threshold disabled to force SMJ/SHJ).
     val big = spark.range(2000)
       .select((col("id") % 97).as("k"), (col("id") * 3).as("v"))
-    val (ck, free) = CheckpointLayout.statSafeClusteredBy(big, "k")
-    // stats dropped: the leaf must report the huge default, not the origin
-    // estimate — so the static planner can never broadcast-build this side
-    val leafStats = ck.queryExecution.optimizedPlan.collectFirst {
-      case l: LogicalRDD => l.stats.sizeInBytes
+    Checkpoints { // exits after materialization: the release must not throw
+      val ck = CheckpointLayout.statSafeClusteredBy(big, "k")
+      // stats dropped: the leaf must report the huge default, not the origin
+      // estimate — so the static planner can never broadcast-build this side
+      val leafStats = ck.queryExecution.optimizedPlan.collectFirst {
+        case l: LogicalRDD => l.stats.sizeInBytes
+      }
+      assert(leafStats.exists(_ >= BigInt(spark.sessionState.conf.defaultSizeInBytes)),
+        s"origin stats not dropped: $leafStats")
+      val (partOk, sortOk) = capturedLayout(ck)
+      assert(partOk && sortOk, s"layout lost in stats drop: part=$partOk sort=$sortOk")
+
+      val thresholdWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val slim = spark.range(97).select(col("id").as("k2"), lit(1L).as("w"))
+        val joined = ck.join(slim, ck("k") === slim("k2"))
+          .groupBy(col("k")).agg(sum(col("v") * col("w")).as("s"))
+        joined.collect()
+        val fin = joined.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head
+        // exactly ONE shuffle: the slim side; the big side streams in place
+        val shuffles = fin.linesIterator.count(_.contains("Exchange hashpartitioning"))
+        assert(shuffles == 1, s"expected only the slim side to exchange, got $shuffles in:\n$fin")
+        // and the big side is not re-sorted: at most one Sort (slim side's SMJ sort)
+        val sorts = fin.linesIterator.count(l => l.trim.matches("^[+:|\\-\\s*()0-9]*Sort \\[.*"))
+        assert(sorts <= 1, s"big side re-sorted:\n$fin")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
+
+      assert(ck.count() == 2000)
     }
-    assert(leafStats.exists(_ >= BigInt(spark.sessionState.conf.defaultSizeInBytes)),
-      s"origin stats not dropped: $leafStats")
-    val (partOk, sortOk) = capturedLayout(ck)
-    assert(partOk && sortOk, s"layout lost in stats drop: part=$partOk sort=$sortOk")
-
-    val thresholdWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val slim = spark.range(97).select(col("id").as("k2"), lit(1L).as("w"))
-      val joined = ck.join(slim, ck("k") === slim("k2"))
-        .groupBy(col("k")).agg(sum(col("v") * col("w")).as("s"))
-      joined.collect()
-      val fin = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      // exactly ONE shuffle: the slim side; the big side streams in place
-      val shuffles = fin.linesIterator.count(_.contains("Exchange hashpartitioning"))
-      assert(shuffles == 1, s"expected only the slim side to exchange, got $shuffles in:\n$fin")
-      // and the big side is not re-sorted: at most one Sort (slim side's SMJ sort)
-      val sorts = fin.linesIterator.count(l => l.trim.matches("^[+:|\\-\\s*()0-9]*Sort \\[.*"))
-      assert(sorts <= 1, s"big side re-sorted:\n$fin")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
-
-    assert(ck.count() == 2000)
-    free() // after materialization: must not throw
   }
 
   test("clustered regime is value-identical to the default regime across the loops") {
@@ -218,16 +220,17 @@ class CheckpointLayoutSpec extends AnyFunSuite {
       (0 until 4).foreach { i =>
         val df = spark.range(500)
           .select((col("id") % 13).as("k"), (col("id") + i).as("v"))
-        val (ck, free) = CheckpointLayout.statSafeClusteredBy(df, "k")
-        val (partOk, sortOk) = capturedLayout(ck)
-        assert(partOk && sortOk, s"capture $i lost its layout")
-        // downstream of the re-bound leaf must plan ADAPTIVE again
-        val down = ck.join(spark.range(13).select(col("id").as("k")), Seq("k"))
-          .groupBy(col("k")).agg(sum(col("v")))
-        assert(down.queryExecution.executedPlan.toString.contains("AdaptiveSparkPlan"),
-          s"downstream of capture $i planned non-adaptive: clone session leaked into the result")
-        assert(ck.count() == 500)
-        free()
+        Checkpoints {
+          val ck = CheckpointLayout.statSafeClusteredBy(df, "k")
+          val (partOk, sortOk) = capturedLayout(ck)
+          assert(partOk && sortOk, s"capture $i lost its layout")
+          // downstream of the re-bound leaf must plan ADAPTIVE again
+          val down = ck.join(spark.range(13).select(col("id").as("k")), Seq("k"))
+            .groupBy(col("k")).agg(sum(col("v")))
+          assert(down.queryExecution.executedPlan.toString.contains("AdaptiveSparkPlan"),
+            s"downstream of capture $i planned non-adaptive: clone session leaked into the result")
+          assert(ck.count() == 500)
+        }
       }
     } finally { done = true; watcher.join(60000) }
     assert(!confFlipped, "shared session conf mutated during a capture window")
@@ -250,12 +253,13 @@ class CheckpointLayoutSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
     val df = spark.createDataFrame(rdd, schema)
     val reliableRound = graft.util.Barriers.ReliableEvery - 1
-    val (out, free) = CheckpointLayout.roundBarrierKeepingLayout(df, reliableRound, Some(dir))
-    assert(acc.value == 400L,
-      s"reliable round evaluated its lineage ${acc.value / 400.0} times, expected once")
-    assert(out.count() == 400L) // reads off checkpoint files, not lineage
-    assert(acc.value == 400L)
-    free()
+    Checkpoints {
+      val out = CheckpointLayout.roundBarrierKeepingLayout(df, reliableRound, Some(dir))
+      assert(acc.value == 400L,
+        s"reliable round evaluated its lineage ${acc.value / 400.0} times, expected once")
+      assert(out.count() == 400L) // reads off checkpoint files, not lineage
+      assert(acc.value == 400L)
+    }
   }
 
   test("reliable round survives total block loss; local round cannot (executor-loss semantics)") {
@@ -267,8 +271,8 @@ class CheckpointLayoutSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckl-loss").toString
     val df = spark.range(300).select((col("id") % 9).as("k"), col("id").as("v"))
     val reliableRound = graft.util.Barriers.ReliableEvery - 1
-    val (rel, _) = CheckpointLayout.roundBarrierKeepingLayout(df, reliableRound, Some(dir))
-    val (loc, _) = CheckpointLayout.roundBarrierKeepingLayout(df, 0, Some(dir))
+    val rel = CheckpointLayout.roundBarrierKeepingLayout(df, reliableRound, Some(dir))
+    val loc = CheckpointLayout.roundBarrierKeepingLayout(df, 0, Some(dir))
     assert(rel.count() == 300 && loc.count() == 300)
     // drop EVERY block (both rounds' local storage)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -277,5 +281,42 @@ class CheckpointLayoutSpec extends AnyFunSuite {
     val localSurvived = try { loc.count(); true } catch { case _: Throwable => false }
     assert(!localSurvived,
       "local round unexpectedly survived total block loss — the probe is vacuous")
+  }
+
+  /** Persisted RDDs an eager loop leaves inside its checkpoint scope right
+    * after the call returns, and the rounds its loop ran. */
+  private def heldAfter(call: => DataFrame): (Int, Int) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (held, loops) = Checkpoints.recording { call; (sc.getPersistentRDDs.keySet -- before).size }
+    (held, loops.head.rounds)
+  }
+
+  /** Mid-loop release pin: 8 rounds must leave as many blocks behind as 2. */
+  private def sameHeldAt2And8(run: Int => DataFrame): Unit = {
+    val (held2, rounds2) = heldAfter(run(2))
+    val (held8, rounds8) = heldAfter(run(8))
+    assert(rounds2 == 2 && rounds8 == 8, s"loop ran $rounds2/$rounds8 rounds, expected 2/8")
+    assert(held2 == held8, s"2 rounds held $held2 RDDs, 8 rounds held $held8")
+  }
+
+  test("shortestPathsIterative holds one generation at any round count") {
+    val chain = (0L until 40L).map(i => (i, i + 1, 1.0)).toDF("origin", "destination", "weight")
+    sameHeldAt2And8(r => graft.graph.H3Graph.shortestPathsIterative(spark, chain,
+      Seq(0L), Seq(40L), maxRounds = r))
+  }
+
+  test("clustered pageRank holds one generation at any round count") {
+    val es = (0L until 60L).map(i => (i, (i * 7 + 3) % 60)).toDF("s", "d")
+    try {
+      spark.conf.set("graft.layout.clusterMinRows", "0")
+      sameHeldAt2And8(r => graft.graph.Ranks.pageRank(es, $"s", $"d", iters = r))
+    } finally spark.conf.unset("graft.layout.clusterMinRows")
+  }
+
+  test("connectedComponents holds one generation at any round count") {
+    // a 600-node chain: pointer halving needs ~log2(600) > 8 rounds
+    val chain = (0L until 600L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    sameHeldAt2And8(r => Dedup.connectedComponents(chain, maxRounds = r, driverEdgeLimit = 0))
   }
 }

@@ -1741,102 +1741,82 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("nearDedupFreeable releases every checkpoint generation it pinned") {
+  /** Runs `body` inside a checkpoint scope: its value, the RDDs pinned
+    * while the scope was open, and those of them still pinned after exit. */
+  private def scoped[T](body: => T): (T, Set[Int], Set[Int]) = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    var pinned = Set.empty[Int]
+    val out = graft.util.Checkpoints { val o = body; pinned = (sc.getPersistentRDDs.keySet -- before).toSet; o }
+    (out, pinned, pinned.intersect(sc.getPersistentRDDs.keySet))
+  }
+
+  test("nearDedup's checkpoint scope releases every generation it pinned") {
     val d = docs.select($"doc_id", $"text").limit(60)
     val corpus = d.unionAll(d.select($"doc_id" + 1000000, $"text"))
     // tiny cap forces the capped band checkpoint AND the overflow-star path
-    val (survivors, free) =
-      Dedup.nearDedupFreeable(corpus, $"doc_id", $"text", maxBucket = 4)
-    val got = survivors.select($"doc_id").as[Long].collect().toSet
-    val pinned = sc.getPersistentRDDs.keySet -- before
+    val (got, pinned, leaked) = scoped(
+      Dedup.nearDedup(corpus, $"doc_id", $"text", maxBucket = 4)
+        .select($"doc_id").as[Long].collect().toSet)
     assert(pinned.nonEmpty, "expected the composition to pin checkpoint blocks")
-    free()
-    val leaked = pinned.intersect(sc.getPersistentRDDs.keySet)
-    assert(leaked.isEmpty, s"free() left RDDs pinned: $leaked")
-    // identical survivor set to the thunk-less overload
+    assert(leaked.isEmpty, s"scope exit left RDDs pinned: $leaked")
+    // identical survivor set to an unscoped run
     val expected = Dedup.nearDedup(corpus, $"doc_id", $"text", maxBucket = 4)
       .select($"doc_id").as[Long].collect().toSet
     assert(got == expected)
   }
 
-  test("every remaining Freeable variant releases its blocks and matches the plain overload") {
-    val sc = spark.sparkContext
-    def check(name: String)(build: => (org.apache.spark.sql.DataFrame, () => Unit))(
-        plain: => org.apache.spark.sql.DataFrame): Unit = {
-      val before = sc.getPersistentRDDs.keySet
-      val (out, free) = build
-      val got = out.collect().map(_.toString).sorted.toSeq
-      val pinned = sc.getPersistentRDDs.keySet -- before
+  test("every scoped Dedup op releases its blocks and matches an unscoped run") {
+    def check(name: String)(build: => org.apache.spark.sql.DataFrame): Unit = {
+      val (got, pinned, leaked) = scoped(build.collect().map(_.toString).sorted.toSeq)
       assert(pinned.nonEmpty, s"$name: expected pinned checkpoint blocks")
-      free()
-      val leaked = pinned.intersect(sc.getPersistentRDDs.keySet)
-      assert(leaked.isEmpty, s"$name: free() left RDDs pinned: $leaked")
-      val want = plain.collect().map(_.toString).sorted.toSeq
-      assert(got == want, s"$name: freeable variant diverged from plain overload")
+      assert(leaked.isEmpty, s"$name: scope exit left RDDs pinned: $leaked")
+      val want = build.collect().map(_.toString).sorted.toSeq
+      assert(got == want, s"$name: scoped run diverged from an unscoped one")
     }
     val d = docs.select($"doc_id", $"text").limit(40)
     val textCorpus = d.unionAll(d.filter($"doc_id" % 5 === 0)
       .select($"doc_id" + 1000000, concat($"text", lit(" tail"))))
     check("ngramJaccardPairs")(
-      Dedup.ngramJaccardPairsFreeable(textCorpus, $"doc_id", $"text", 2, 0.5))(
       Dedup.ngramJaccardPairs(textCorpus, $"doc_id", $"text", 2, 0.5))
     check("prefixJaccardJoin")(
-      Dedup.prefixJaccardJoinFreeable(textCorpus, $"doc_id", $"text", 2, 1, 2))(
       Dedup.prefixJaccardJoin(textCorpus, $"doc_id", $"text", 2, 1, 2))
     val e = embs.filter($"vec_id" < 60)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val vecCorpus = e.unionAll(e.filter($"vec_id" % 5 === 0)
       .select($"vec_id" + 1000000, transform($"v", x => x * 1.5d)))
     check("embeddingNearDupPairs")(
-      Dedup.embeddingNearDupPairsFreeable(vecCorpus, $"vec_id", $"v", 0.995))(
       Dedup.embeddingNearDupPairs(vecCorpus, $"vec_id", $"v", 0.995))
     check("embeddingNearDupLsh")(
-      Dedup.embeddingNearDupLshFreeable(vecCorpus, $"vec_id", $"v", 64, 4, 0.995))(
       Dedup.embeddingNearDupLsh(vecCorpus, $"vec_id", $"v", 64, 4, 0.995))
     check("semanticDedup")(
-      Dedup.semanticDedupFreeable(vecCorpus, $"vec_id", $"v", m = 4, iters = 1,
-        threshold = 0.995))(
       Dedup.semanticDedup(vecCorpus, $"vec_id", $"v", m = 4, iters = 1,
         threshold = 0.995))
     val ref = docs.select($"doc_id", $"text")
     val newBatch = ref.filter($"doc_id" < 20).select(($"doc_id" + 5000).as("doc_id"),
       when($"doc_id" % 2 === 0, $"text").otherwise(concat($"text", lit(" fresh"))).as("text"))
     check("incrementalDedup")(
-      Dedup.incrementalDedupFreeable(newBatch, ref, $"text", $"text",
-        expectedRefItems = 10000L))(
       Dedup.incrementalDedup(newBatch, ref, $"text", $"text",
         expectedRefItems = 10000L))
     check("incrementalNearDedup")(
-      Dedup.incrementalNearDedupFreeable(newBatch, ref, $"doc_id", $"text",
-        $"doc_id", $"text"))(
       Dedup.incrementalNearDedup(newBatch, ref, $"doc_id", $"text",
         $"doc_id", $"text"))
   }
 
-  test("bandedHammingPairsFreeable releases its hash + band checkpoints") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+  test("bandedHammingPairs' scope releases its hash + band checkpoints") {
     val d = docs.select($"doc_id", $"text").limit(40)
     val corpus = d.unionAll(d.select($"doc_id" + 1000000, $"text"))
     val hashed = Dedup.simHash(corpus, $"doc_id", $"text")
-    val (pairs, free) = Dedup.bandedHammingPairsFreeable(hashed, $"__id",
-      $"simhash", Dedup.SimHashBits, maxHamming = 3, maxBand = 4)
-    val n = pairs.count()
+    val (n, pinned, leaked) = scoped(Dedup.bandedHammingPairs(hashed, $"__id",
+      $"simhash", Dedup.SimHashBits, maxHamming = 3, maxBand = 4).count())
     assert(n >= 40, s"expected every identical clone pair, got $n")
-    val pinned = sc.getPersistentRDDs.keySet -- before
     assert(pinned.nonEmpty)
-    free()
-    val leaked = pinned.intersect(sc.getPersistentRDDs.keySet)
-    assert(leaked.isEmpty, s"free() left RDDs pinned: $leaked")
-    // the uncapped path pins only the hash projection and frees it too
-    val before2 = sc.getPersistentRDDs.keySet
-    val (p2, free2) = Dedup.bandedHammingPairsFreeable(hashed, $"__id",
-      $"simhash", Dedup.SimHashBits, maxHamming = 3, maxBand = Int.MaxValue)
-    assert(p2.count() >= n)
-    free2()
-    val leaked2 = (sc.getPersistentRDDs.keySet -- before2)
-    assert(leaked2.isEmpty, s"uncapped free() left RDDs pinned: $leaked2")
+    assert(leaked.isEmpty, s"scope exit left RDDs pinned: $leaked")
+    // the uncapped path pins only the hash projection and releases it too
+    val (n2, pinned2, leaked2) = scoped(Dedup.bandedHammingPairs(hashed, $"__id",
+      $"simhash", Dedup.SimHashBits, maxHamming = 3, maxBand = Int.MaxValue).count())
+    assert(n2 >= n)
+    assert(pinned2.nonEmpty)
+    assert(leaked2.isEmpty, s"uncapped scope exit left RDDs pinned: $leaked2")
   }
 }
